@@ -18,10 +18,14 @@ import graft.route.Router
   *
   * A re-run after a crash with the same outputRoot skips every sealed
   * bucket (see [[graft.lineage.Lineage]]), so the job is idempotent.
-  * Prints two JSON lines: the per-sink report and per-partition
-  * throughput (admin-API analogs).
+  * Prints three JSON lines (admin-API analogs): SINKS, the per-sink
+  * report over every committed bucket; PARTITIONS, per-partition
+  * throughput; and COMMIT, the lineage progress.
   */
 object RunPipeline {
+
+  final case class BatchResult(report: Metrics.Report, committed: Int, bucketsTotal: Int)
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: RunPipeline <inputDir> <outputRoot> [batchId] [nBuckets]")
     val inputDir = args(0)
@@ -41,7 +45,15 @@ object RunPipeline {
                      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    runBatch(spark, inputDir, outputRoot, batchId, nBuckets)
+    spark.stop()
+  }
 
+  /** The batch body of [[main]] on a given session: parse, commit,
+    * report, printing the three JSON lines.
+    */
+  def runBatch(spark: SparkSession, inputDir: String, outputRoot: String,
+      batchId: String, nBuckets: Int): BatchResult = {
     val listener = PartitionMetrics.attach(spark)
 
     // Live admin endpoint (the reference's REST admin API,
@@ -53,7 +65,7 @@ object RunPipeline {
     // counters, publisher/api.go:33-36) — what `lc-admin` would poll.
     val admin = sys.env.get("GRAFT_ADMIN_PORT").map { p =>
       val srv = graft.admin.AdminServer.forBatch(
-        spark, outputRoot, batchId, nBuckets, () => listener.snapshot)
+        outputRoot, batchId, nBuckets, () => listener.snapshot)
       val addr = srv.start(p.toInt)
       println(s"""ADMIN {"host":"${addr.getHostString}","port":${addr.getPort}}""")
       srv
@@ -76,14 +88,31 @@ object RunPipeline {
     val assigned = TranscriptPipeline.run(spark, turns, parseStages)
     val committed = Lineage.run(Router.stripMeta(assigned), outputRoot, nBuckets, batchId)
 
-    val routed = Lineage.readData(spark, outputRoot)
-    val report = Metrics.fromSinkCounts(Router.sinkCounts(routed),
+    val report = Metrics.fromSinks(committedSinks(spark, outputRoot),
       (System.nanoTime() - t0) / 1e9)
     org.apache.spark.graftbridge.CoreBridge.waitListenerBusEmpty(spark.sparkContext)
+    spark.sparkContext.removeSparkListener(listener)
+    val total = Lineage.committed(outputRoot).size
     println("SINKS " + Metrics.toJson(report))
     println("PARTITIONS " + PartitionMetrics.toJson(listener.snapshot))
-    println(s"""COMMIT {"batch_id":"$batchId","buckets_committed":$committed,"buckets_total":${Lineage.committed(outputRoot).size}}""")
+    println(s"""COMMIT {"batch_id":"$batchId","buckets_committed":$committed,"buckets_total":$total}""")
     admin.foreach(_.stop())
-    spark.stop()
+    BatchResult(report, committed, total)
+  }
+
+  /** Per-sink turns and bytes over every committed bucket, folded from
+    * the lineage markers — including buckets an earlier, crashed run
+    * sealed. Only a bucket whose marker predates per-sink counts is read
+    * back.
+    */
+  def committedSinks(spark: SparkSession, outputRoot: String): Seq[Metrics.SinkMetric] = {
+    val (tallied, legacy) = Lineage.readMarkers(outputRoot).partition(_.sinks.isDefined)
+    val readBack =
+      if (legacy.isEmpty) Nil
+      else Router.sinkCounts(Lineage.readData(spark, outputRoot, legacy.map(_.partitionId).toSet))
+        .collect().toSeq.map(r => Lineage.SinkTally(r.getString(0), r.getLong(1),
+          if (r.isNullAt(2)) 0L else r.getLong(2)))
+    Lineage.sinkTotals(tallied.flatMap(_.sinks.get) ++ readBack)
+      .map(t => Metrics.SinkMetric(t.sink, t.rows, t.bytes))
   }
 }

@@ -185,45 +185,22 @@ object AdminServer {
     * per-sink turn/byte counts over the buckets committed SO FAR (counts
     * grow as buckets seal, exactly like publishedLines grows per ack) —
     * plus lineage-resume progress and the per-partition throughput
-    * snapshot.
+    * snapshot. The sink counters fold the lineage markers' tallies, so a
+    * poll reads a few small files and runs no Spark job; a bucket whose
+    * marker predates per-sink counts is left out of them.
     */
-  def forBatch(spark: org.apache.spark.sql.SparkSession, outputRoot: String,
-      batchId: String, nBuckets: Int, partitions: () => Any): AdminServer = {
+  def forBatch(outputRoot: String, batchId: String, nBuckets: Int,
+      partitions: () => Any): AdminServer = {
     val srv = new AdminServer()
     srv.register("pipeline/partitions", partitions)
     srv.register("pipeline/lineage", () => Map(
       "batch_id" -> batchId,
       "buckets_committed" -> graft.lineage.Lineage.committed(outputRoot).size,
       "buckets_total" -> nBuckets))
-    // The counts scan committed buckets, so they're cached keyed by the
-    // committed-bucket SET: polls between commits are O(1) marker listings
-    // (no Spark job on the admin dispatcher thread), and a new sealed
-    // bucket invalidates the cache exactly once.
-    val sinksCache = new java.util.concurrent.atomic.AtomicReference[
-      (Set[Int], Map[String, Any])](null)
     srv.register("pipeline/sinks", () => {
-      val committed = graft.lineage.Lineage.committed(outputRoot)
-      if (committed.isEmpty) Map.empty[String, Any]
-      else {
-        val c = sinksCache.get()
-        if (c != null && c._1 == committed) c._2
-        else {
-          // scan exactly the listed set: a bucket committing between a
-          // second listing and this scan would make counts inconsistent
-          // with the cache key (and with /pipeline/lineage at that instant)
-          val fresh: Map[String, Any] = graft.route.Router.sinkCounts(
-              graft.lineage.Lineage.readData(spark, outputRoot, committed))
-            .collect() // bounded: one row per sink
-            // bytes is sum(octet_length(text)): NULL when every committed
-            // row of a sink has null text — report 0, not a 500 per poll
-            .map(r => r.getString(0) -> (Map(
-              "turns" -> r.getLong(1),
-              "bytes" -> (if (r.isNullAt(2)) 0L else r.getLong(2))): Any))
-            .toMap
-          sinksCache.set((committed, fresh))
-          fresh
-        }
-      }
+      val lineage = graft.lineage.Lineage
+      lineage.sinkTotals(lineage.readMarkers(outputRoot).flatMap(_.sinks.getOrElse(Nil)))
+        .map(t => t.sink -> Map("turns" -> t.rows, "bytes" -> t.bytes)).toMap
     })
     srv
   }

@@ -19,10 +19,13 @@ object Metrics {
       bytesPerSec: Double,
       sinks: Seq[SinkMetric])
 
-  def fromSinkCounts(sinkCounts: DataFrame, wallClockSec: Double): Report = {
-    val rows = sinkCounts.collect().map { r =>
+  def fromSinkCounts(sinkCounts: DataFrame, wallClockSec: Double): Report =
+    fromSinks(sinkCounts.collect().map { r =>
       SinkMetric(r.getAs[String]("sink"), r.getAs[Long]("turns"), r.getAs[Long]("bytes"))
-    }.toSeq.sortBy(_.sink)
+    }.toSeq, wallClockSec)
+
+  def fromSinks(sinks: Seq[SinkMetric], wallClockSec: Double): Report = {
+    val rows = sinks.sortBy(_.sink)
     val totalTurns = rows.map(_.turns).sum
     val totalBytes = rows.map(_.bytes).sum
     Report(totalTurns, wallClockSec,

@@ -24,7 +24,7 @@ object QueriesR6 {
   // ---------------------------------------------------------------
   def qStreamReplay(spark: SparkSession, dir: String): DataFrame = {
     val events = tbl(spark, dir, "events")
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_replay")
+    val base = graft.util.Fs.tempDirDeletedAtExit("graft_stream_replay")
     val srcDir = s"$base/src"
     val ckptDir = s"$base/ckpt"
     val outRoot = s"$base/out"
@@ -126,7 +126,7 @@ object QueriesR6 {
         .select((col("doc_id") + 10000000L).as("doc_id"), col("text")))
       .select(col("doc_id"), col("text"),
         timestamp_seconds(lit(1700000000L) + pmod(col("doc_id"), lit(100L))).as("ts"))
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_dedup")
+    val base = graft.util.Fs.tempDirDeletedAtExit("graft_stream_dedup")
     val srcDir = s"$base/src"
     docs.repartition(8, col("doc_id")).write.mode("overwrite").parquet(srcDir)
     // deterministic micro-batch assignment (mtime order == partition

@@ -157,7 +157,7 @@ object QueriesR7 {
     val cutoff = new java.sql.Timestamp(maxTs.getTime + 24L * 3600 * 1000)
     val sentinels = ev.select(col("user_id")).distinct()
       .withColumn("ts", lit(new java.sql.Timestamp(maxTs.getTime + 48L * 3600 * 1000)))
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_sessions")
+    val base = graft.util.Fs.tempDirDeletedAtExit("graft_stream_sessions")
     // range-partitioned by ts so file order == time order: no event is
     // late beyond the watermark when micro-batches consume files in
     // path order (the sentinel lands in the last file by construction)

@@ -92,7 +92,7 @@ object QueriesR7b {
     val cutoffSec = (maxTs.getTime + 24L * 3600 * 1000) / 1000
     val sentinels = ev.select(col("event_type")).distinct()
       .withColumn("ts", lit(new java.sql.Timestamp(maxTs.getTime + 48L * 3600 * 1000)))
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_windows")
+    val base = graft.util.Fs.tempDirDeletedAtExit("graft_stream_windows")
     ev.unionByName(sentinels).repartitionByRange(4, col("ts"))
       .write.mode("overwrite").parquet(s"$base/src")
     // pin mtimes ascending (time-order consumption by construction, not

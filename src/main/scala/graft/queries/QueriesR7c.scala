@@ -638,7 +638,7 @@ object QueriesR7c {
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .select(col("user_id"), col("event_type"),
         col("ts").cast("timestamp").as("ts"))
-    val base = java.nio.file.Files.createTempDirectory("graft_stream_attrib")
+    val base = graft.util.Fs.tempDirDeletedAtExit("graft_stream_attrib")
     ev.repartitionByRange(4, col("ts"))
       .write.mode("overwrite").parquet(s"$base/src")
     // the completeness claim below REQUIRES event-time-ordered file

@@ -33,6 +33,21 @@ object Fs {
         e.getCause.isInstanceOf[java.nio.file.NoSuchFileException] => ()
     }
 
+  private val deleteAtExit = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
+  private lazy val exitHook: Unit =
+    sys.addShutdownHook(deleteAtExit.forEach(deleteRecursively(_, tolerant = true)))
+
+  /** A new temp directory that is deleted, with everything under it, when
+    * the JVM shuts down — for outputs a returned lazy frame still reads,
+    * so the directory cannot go when the call that made it returns.
+    */
+  def tempDirDeletedAtExit(prefix: String): Path = {
+    exitHook
+    val d = Files.createTempDirectory(prefix)
+    deleteAtExit.add(d)
+    d
+  }
+
   /** Filesystem glob with Go `filepath.Glob` semantics (the shape the
     * reference's config `includes` use, `lc-lib/prospector/config.go:74`):
     * `*`/`?`/`[...]` match within one path segment, no `**`, and matches

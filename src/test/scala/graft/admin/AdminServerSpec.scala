@@ -73,7 +73,7 @@ class AdminServerSpec extends AnyFunSuite {
       ("c1", "hello", "sink_main"), ("c1", "world!", "sink_main"),
       ("c2", "err", "sink_errors")
     ).toDF("conv_id", "text", graft.route.Router.SinkCol)
-    val srv = AdminServer.forBatch(spark, root, "b1", 4, () => Map("p" -> 1))
+    val srv = AdminServer.forBatch(root, "b1", 4, () => Map("p" -> 1))
     val addr = srv.start()
     try {
       // before any bucket commits: empty counters, zero progress

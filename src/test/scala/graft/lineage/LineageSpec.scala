@@ -122,4 +122,72 @@ class LineageSpec extends SparkTestBase {
     assert(entries.agg(sum("bytes")).collect()(0).getLong(0) == 0L)
     assert(Lineage.readData(spark, root).count() == 40L)
   }
+
+  /** Turns with a sink column and some null texts. */
+  private lazy val routed = turns
+    .withColumn("_sink", when(col("role") === "user", lit("sink_a")).otherwise(lit("sink_b")))
+    .withColumn("text", when(col("turn_idx") % 5 === 3, lit(null).cast("string"))
+      .otherwise(col("text")))
+
+  test("each marker's rows/bytes and per-sink split equal a group-by over its committed bucket") {
+    val root = freshRoot()
+    Lineage.run(routed, root, nBuckets = 8, batchId = "b1", maxBucketsToCommit = 5)
+    Lineage.run(routed, root, nBuckets = 8, batchId = "b2")
+    val markers = Lineage.readMarkers(root)
+    assert(markers.map(_.partitionId).toSet == Lineage.committed(root))
+    assert(markers.map(e => e.partitionId -> (e.rows, e.bytes)).toMap ==
+      TallyCheck.rescannedBuckets(spark, root))
+    assert(TallyCheck.observed(root) == TallyCheck.rescanned(spark, root))
+    assert(markers.forall(e => e.sinks.get.map(_.rows).sum == e.rows))
+    assert(markers.map(_.rows).sum == turns.count())
+  }
+
+  test("observed tally == re-scan when a task fails its first attempt (local[2,2] retry)") {
+    val root = freshRoot()
+    val (code, out) = graft.ChildJvm.run("graft.lineage.RetryTallyMain", Seq(root))
+    assert(code == 0, out)
+    val failed = out.linesIterator.collectFirst {
+      case l if l.startsWith("FAILED_TASKS ") => l.stripPrefix("FAILED_TASKS ").trim.toInt
+    }
+    assert(failed.exists(_ >= 1), s"no task attempt failed: $out")
+    // the child sealed every bucket; its tallies match this JVM's re-scan
+    assert(Lineage.committed(root).size == 4)
+    assert(TallyCheck.observed(root) == TallyCheck.rescanned(spark, root))
+    assert(Lineage.readMarkers(root).map(_.rows).sum == Lineage.readData(spark, root).count())
+  }
+}
+
+/** Commits under `local[2,2]` with a task that throws partway through its
+  * first attempt, after the tally has seen some of its rows; prints how
+  * many task attempts failed.
+  */
+object RetryTallyMain {
+  private val seen = new java.util.concurrent.ConcurrentHashMap[Long, java.lang.Integer]()
+
+  def main(args: Array[String]): Unit = {
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[2,2]").appName("retry-tally")
+      .config("spark.sql.shuffle.partitions", "2")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    val failed = new java.util.concurrent.atomic.AtomicInteger()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.reason != org.apache.spark.Success) failed.incrementAndGet()
+    })
+    val failOnce = udf { (s: String) =>
+      val tc = org.apache.spark.TaskContext.get()
+      val n = seen.merge(tc.taskAttemptId(), 1, (a: Integer, b: Integer) => a + b)
+      if (tc.partitionId() == 0 && tc.attemptNumber() == 0 && n == 40)
+        throw new IllegalStateException("injected first-attempt failure")
+      s
+    }.asNondeterministic()
+    val df = TranscriptGen.generate(spark, seed = 17L, nConvs = 40L, parallelism = 2).toDF()
+      .withColumn("_sink", when(col("role") === "user", lit("sink_a")).otherwise(lit("sink_b")))
+      .withColumn("text", failOnce(col("text")))
+    Lineage.run(df, args(0), nBuckets = 4, batchId = "retry")
+    org.apache.spark.graftbridge.CoreBridge.waitListenerBusEmpty(spark.sparkContext)
+    println(s"FAILED_TASKS ${failed.get()}")
+    spark.stop()
+  }
 }

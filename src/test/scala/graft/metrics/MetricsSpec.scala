@@ -1,9 +1,9 @@
 package graft.metrics
 
-import graft.SparkTestBase
+import graft.{RunPipeline, SparkTestBase, TranscriptPipeline}
+import graft.lineage.Lineage
 import graft.model.TranscriptGen
 import graft.route.Router
-import graft.TranscriptPipeline
 import org.apache.spark.sql.functions._
 
 class MetricsSpec extends SparkTestBase {
@@ -94,27 +94,82 @@ class MetricsSpec extends SparkTestBase {
     val tmp = java.nio.file.Files.createTempDirectory("graft-runpipe").toString
     TranscriptGen.generate(spark, 8L, 25L, 4).toDF()
       .write.mode("overwrite").parquet(s"$tmp/in")
-    // note: RunPipeline builds its own session config via getOrCreate —
-    // reuses this suite's session in-process
-    RunPipelineHarness.run(spark, s"$tmp/in", s"$tmp/out", "b1", 8)
-    val n1 = graft.lineage.Lineage.readData(spark, s"$tmp/out").count()
+    quietly(RunPipeline.runBatch(spark, s"$tmp/in", s"$tmp/out", "b1", 8))
+    val n1 = Lineage.readData(spark, s"$tmp/out").count()
     // second run is a no-op (all buckets sealed)
-    val committed = graft.lineage.Lineage.run(
+    val committed = Lineage.run(
       TranscriptPipeline.run(spark, spark.read.parquet(s"$tmp/in")),
       s"$tmp/out", 8, "b2")
     assert(committed == 0)
-    assert(graft.lineage.Lineage.readData(spark, s"$tmp/out").count() == n1)
+    assert(Lineage.readData(spark, s"$tmp/out").count() == n1)
     assert(n1 == spark.read.parquet(s"$tmp/in").count())
   }
-}
 
-/** In-process harness mirroring RunPipeline.main's body (main would spawn
-  * session config conflicts inside the shared test JVM).
-  */
-object RunPipelineHarness {
-  def run(spark: org.apache.spark.sql.SparkSession, in: String, out: String,
-      batchId: String, buckets: Int): Unit = {
-    val assigned = TranscriptPipeline.run(spark, spark.read.parquet(in))
-    graft.lineage.Lineage.run(Router.stripMeta(assigned), out, buckets, batchId)
+  /** Runs `f`, keeping its printed lines off the test output; returns its
+    * result and those lines.
+    */
+  private def quietly[T](f: => T): (T, Seq[String]) = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val r = Console.withOut(buf)(f)
+    (r, buf.toString("UTF-8").linesIterator.toSeq)
+  }
+
+  private def runInput(seed: Long): (String, String) = {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-report").toString
+    TranscriptGen.generate(spark, seed, 30L, 4).toDF()
+      .write.mode("overwrite").parquet(s"$tmp/in")
+    (s"$tmp/in", s"$tmp/out")
+  }
+
+  /** The SINKS report as a read-back of every committed bucket gives it. */
+  private def readBackReport(root: String): Seq[Metrics.SinkMetric] =
+    Metrics.fromSinkCounts(Router.sinkCounts(Lineage.readData(spark, root)), 1.0).sinks
+
+  private def assertReportIsReadBack(res: RunPipeline.BatchResult, lines: Seq[String],
+      root: String): Unit = {
+    assert(res.report.sinks == readBackReport(root))
+    assert(res.report.inputTurns == Lineage.readData(spark, root).count())
+    assert(lines.exists(_ == "SINKS " + Metrics.toJson(res.report)))
+    assert(lines.exists(_.startsWith("PARTITIONS [")))
+    assert(lines.exists(_.startsWith(s"""COMMIT {"batch_id":""")))
+  }
+
+  test("SINKS report of a fresh run equals a read-back of the committed data") {
+    val (in, root) = runInput(31L)
+    val (res, lines) = quietly(RunPipeline.runBatch(spark, in, root, "b1", 8))
+    assert(res.committed == 8 && res.bucketsTotal == 8)
+    assertReportIsReadBack(res, lines, root)
+  }
+
+  test("SINKS report after a crash and a resume covers the buckets both runs sealed") {
+    val (in, root) = runInput(32L)
+    val crashed = Lineage.run(
+      Router.stripMeta(TranscriptPipeline.run(spark, spark.read.parquet(in))),
+      root, 8, "b1", maxBucketsToCommit = 3)
+    assert(crashed == 3)
+    val (res, lines) = quietly(RunPipeline.runBatch(spark, in, root, "b2", 8))
+    assert(res.committed == 5 && res.bucketsTotal == 8)
+    assertReportIsReadBack(res, lines, root)
+  }
+
+  test("SINKS report over markers without per-sink counts reads those buckets back") {
+    val (in, root) = runInput(33L)
+    quietly(RunPipeline.runBatch(spark, in, root, "b1", 8))
+    // strip the per-sink counts from half the markers, as a root sealed
+    // before markers carried them would have none
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val dir = java.nio.file.Paths.get(root, "lineage")
+    for (b <- Lineage.committed(root) if b % 2 == 0) {
+      val f = dir.resolve(s"p$b.json")
+      val n = mapper.readTree(f.toFile).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      n.remove("sinks")
+      java.nio.file.Files.writeString(f, mapper.writeValueAsString(n))
+    }
+    assert(Lineage.readMarkers(root).count(_.sinks.isEmpty) == 4)
+    assert(RunPipeline.committedSinks(spark, root) == readBackReport(root))
+    // a resume over the legacy root reports the same numbers
+    val (res, lines) = quietly(RunPipeline.runBatch(spark, in, root, "b2", 8))
+    assert(res.committed == 0)
+    assertReportIsReadBack(res, lines, root)
   }
 }

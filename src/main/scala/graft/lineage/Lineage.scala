@@ -32,6 +32,16 @@ import org.apache.spark.sql.functions._
   * reads the output back; the per-sink report and the admin counters
   * fold the markers ([[readMarkers]], [[sinkTotals]]).
   *
+  * The registrar persists in-process, where Go's chmod is a plain
+  * syscall; so does the staged write here. It carries
+  * [[graft.util.NoForkLocalFileSystem.WriteOptions]], so a `file:` root
+  * is written through [[graft.util.NoForkLocalFileSystem]] instead of a
+  * forked `chmod` per file and directory (~780 per 64-bucket batch). The
+  * options are scoped to the write, not the session, because Hadoop's
+  * `FileSystem` cache is keyed by scheme, authority and user, not by
+  * conf: a session-wide `fs.file.impl` is silently ignored once anything
+  * in the JVM has obtained a `file:` filesystem.
+  *
   * On a real cluster the same seam is an Iceberg snapshot commit; this
   * directory implementation keeps identical semantics without the runtime
   * jar (SURVEY.md §7 `TableIO` seam).
@@ -162,7 +172,8 @@ object Lineage {
         if (hasSink) col(graft.route.Router.SinkCol) else lit(null).cast("string"),
         if (df.columns.contains("text")) coalesce(octet_length(col("text")), lit(0))
         else lit(0)).as("tally"))
-      .write.mode("overwrite").partitionBy(BucketCol).parquet(staging.toString)
+      .write.options(graft.util.NoForkLocalFileSystem.WriteOptions)
+      .mode("overwrite").partitionBy(BucketCol).parquet(staging.toString)
     // no fallback scan: a tally that never arrives fails the run before
     // any bucket is sealed, and a re-run redoes the staging
     val tally = Await.result(obs.future, TallyWait).getSeq[Row](0)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.EventFns
 import graft.model.Envelope
+import graft.util.NoForkLocalFileSystem
 
 /** A routed sink: name + routing predicate (+ optional per-event "index
   * pattern" à la the ES transport's `index pattern`,
@@ -48,10 +49,18 @@ object Router {
   /** Single-pass partitioned write of an assigned frame plus the schema
     * manifest. Aggregates are a separate call ([[aggregates]]) — callers
     * that want both from one scan cache/persist `assigned` themselves.
+    *
+    * Both writes carry [[NoForkLocalFileSystem.WriteOptions]]: a `file:`
+    * outDir gets its file modes set in-process rather than by a forked
+    * `chmod` per file and directory. They are writer options, not session
+    * conf, because Hadoop's `FileSystem` cache is keyed by scheme,
+    * authority and user, not by conf, so a session-wide `fs.file.impl`
+    * is silently ignored once anything in the JVM has obtained a `file:`
+    * filesystem. Other schemes are untouched.
     */
   def write(assigned: DataFrame, outDir: String): Unit = {
     stripMeta(assigned)
-      .write.mode("overwrite")
+      .write.options(NoForkLocalFileSystem.WriteOptions).mode("overwrite")
       .partitionBy(SinkCol)
       .parquet(outDir)
     installTemplate(stripMeta(assigned), outDir)
@@ -77,7 +86,10 @@ object Router {
     // outDir (file://, hdfs://, s3a://) must not make the manifest write
     // fail with a local NoSuchFileException after the data materialized
     val path = new org.apache.hadoop.fs.Path(outDir, "_template.json")
-    val fs = path.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val conf = new org.apache.hadoop.conf.Configuration(
+      df.sparkSession.sparkContext.hadoopConfiguration)
+    NoForkLocalFileSystem.WriteOptions.foreach { case (k, v) => conf.set(k, v) }
+    val fs = path.getFileSystem(conf)
     val out = fs.create(path, true)
     try out.write(json.getBytes("UTF-8")) finally out.close()
   }
@@ -150,6 +162,7 @@ object Router {
     * (`tablemanager.go:131-215`): one write pass materialising every
     * per-event table (directory) with day partitions inside, retention
     * applied up front. Layout: `outDir/_table=<name>/_day=<yyyy-MM-dd>/`.
+    * Carries [[NoForkLocalFileSystem.WriteOptions]] like [[write]].
     */
   def writeDorisTables(df: DataFrame, tablePattern: String, tsCol: Column,
       retentionDays: Int, now: Column, outDir: String): Unit =
@@ -157,7 +170,7 @@ object Router {
       .filter(retentionFilter(tsCol, retentionDays, now))
       .withColumn("_table", dorisTableColumn(df, tablePattern))
       .withColumn("_day", date_format(tsCol, "yyyy-MM-dd"))
-      .write.mode("overwrite")
+      .write.options(NoForkLocalFileSystem.WriteOptions).mode("overwrite")
       .partitionBy("_table", "_day")
       .parquet(outDir)
 }

@@ -44,6 +44,15 @@ object Sampling {
   def keep(key: Column, rate: Double): Column =
     hash8(key) < lit(thresholdHex(rate))
 
+  /** Group keys of a rate or threshold table must be non-null: a row's
+    * group is matched with `=`, which a null key never satisfies, so a
+    * null entry could apply to no row (a null group falls through to
+    * the table's default).
+    */
+  private def requireNonNullKeys(keys: Iterable[String]): Unit =
+    require(!keys.exists(_ == null),
+      "group keys must be non-null: a null group equals no key and falls through to the default")
+
   /** Keep-predicate for a group-keyed mixture: `rates` maps group values
     * to target keep-rates; groups not listed use `default`. The rate
     * table is a compile-time literal CASE chain — mixtures are small
@@ -51,6 +60,7 @@ object Sampling {
     */
   def mixtureKeep(key: Column, group: Column, rates: Map[String, Double],
       default: Double = 1.0): Column = {
+    requireNonNullKeys(rates.keys)
     val h = hash8(key)
     rates.toSeq.sortBy(_._1).foldRight(h < lit(thresholdHex(default))) {
       case ((g, r), acc) => when(group === lit(g), h < lit(thresholdHex(r))).otherwise(acc)
@@ -77,18 +87,21 @@ object Sampling {
     * the thresholds are config-sized plan state, and the keep pass is
     * the same zero-shuffle md5 predicate as [[mixtureKeep]].
     *
-    * Disclosed edges: group keys must be NON-NULL (callers aggregate
-    * them from a non-null column; a null key would NPE in the sort
-    * here and in [[mixtureKeepHex]]'s equality chain), and a group so
+    * Disclosed edges: group keys must be NON-NULL — a null key in
+    * `counts` (or in the rates of [[mixtureKeep]] and the thresholds of
+    * [[mixtureKeepHex]]) fails a `require` naming that contract, since
+    * no row's group `=` a null key; callers aggregate keys from a
+    * non-null column, or map null to a sentinel first. And a group so
     * large that `t64` floors to 0 gets threshold `"00000000"` — no md5
     * prefix is `< "00000000"`, so that group drops ENTIRELY rather
-    * than sampling at a sub-2⁻³² rate. Both follow from the integer
-    * spelling the oracle replays; neither occurs for the declared
+    * than sampling at a sub-2⁻³² rate. This follows from the integer
+    * spelling the oracle replays and does not occur for the declared
     * queries' inputs.
     */
   def temperatureThresholds(counts: Seq[(String, Long)],
       targetTotal: Long): Map[String, String] = {
     require(counts.nonEmpty && counts.forall(_._2 > 0), "positive group counts required")
+    requireNonNullKeys(counts.map(_._1))
     val w = counts.map { case (g, n) => g -> math.floor(math.sqrt(n.toDouble)).toLong }
     val sw = w.map(_._2).sum
     counts.zip(w).map { case ((g, n), (_, wg)) =>
@@ -102,6 +115,7 @@ object Sampling {
     */
   def mixtureKeepHex(key: Column, group: Column,
       thresholds: Map[String, String]): Column = {
+    requireNonNullKeys(thresholds.keys)
     val h = hash8(key)
     thresholds.toSeq.sortBy(_._1).foldRight(lit(false)) {
       case ((g, t), acc) => when(group === lit(g), h < lit(t)).otherwise(acc)

@@ -156,13 +156,13 @@ object Stats {
     */
   def histogram(df: DataFrame, columns: Seq[String], nbins: Int): DataFrame = {
     require(nbins >= 1 && columns.nonEmpty)
-    val aggs = columns.flatMap(c => Seq(
-      min(col(c).cast("double")).as(s"mn_$c"),
-      max(col(c).cast("double")).as(s"mx_$c")))
+    // a name is an identifier, never parsed: spaces, quotes and dots in
+    // it stay part of the name (inner backticks doubled)
+    def value(c: String) = col("`" + c.replace("`", "``") + "`").cast("double")
+    val aggs = columns.flatMap(c => Seq(min(value(c)), max(value(c))))
     val s = df.agg(aggs.head, aggs.tail: _*).head // bounded: 2·cols doubles
-    val stackExpr = s"stack(${columns.length}, " +
-      columns.map(c => s"'$c', cast($c as double)").mkString(", ") +
-      ") as (col_name, x)"
+    val stacked = stack(lit(columns.length) +: columns.flatMap(c => Seq(lit(c), value(c))): _*)
+      .as(Seq("col_name", "x"))
     val bucket = columns.zipWithIndex.foldRight(lit(-1).cast("int")) {
       case ((c, i), acc) =>
         // an all-NULL (or empty) column has NULL min/max — its rows are
@@ -178,7 +178,7 @@ object Stats {
           }
         when(col("col_name") === lit(c), b).otherwise(acc)
     }
-    df.select(expr(stackExpr)).filter(col("x").isNotNull)
+    df.select(stacked).filter(col("x").isNotNull)
       .withColumn("bucket", bucket)
       .groupBy("col_name", "bucket").agg(count(lit(1)).as("n"))
   }

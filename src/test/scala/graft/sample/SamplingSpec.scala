@@ -167,6 +167,21 @@ class SamplingSpec extends SparkTestBase {
     assert(again.toSeq == expect)
   }
 
+  test("a null group key is rejected by name, not an NPE in the key sort") {
+    import graft.sample.Sampling
+    val contract = "group keys must be non-null"
+    def rejects(f: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](f)
+      assert(e.getMessage.contains(contract), e.getMessage)
+    }
+    rejects(Sampling.temperatureThresholds(Seq("en" -> 10L, (null: String) -> 5L), 8L))
+    rejects(Sampling.mixtureKeep(col("id"), col("g"), Map("en" -> 0.5, (null: String) -> 0.1)))
+    rejects(Sampling.mixtureKeepHex(col("id"), col("g"), Map("en" -> "80000000", (null: String) -> "g")))
+    // a null ROW group is fine: it equals no key and takes the default
+    val df = Seq((1L, Option("en")), (2L, Option.empty[String])).toDF("id", "g")
+    assert(df.filter(Sampling.mixtureKeep(col("id"), col("g"), Map("en" -> 0.0))).count() == 1)
+  }
+
   test("temperature thresholds: flatten the head, cap at always-keep, exact integer replay") {
     import graft.sample.Sampling
     val counts = Seq("en" -> 800L, "de" -> 100L, "fr" -> 100L, "ta" -> 4L)

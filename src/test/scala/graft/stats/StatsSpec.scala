@@ -113,6 +113,27 @@ class StatsSpec extends SparkTestBase {
     assert(got.filter(_._1._1 == "b").values.sum == 160L)
   }
 
+  test("histogram: column names with spaces, quotes and backticks are identifiers, not SQL") {
+    import spark.implicits._
+    val rows = Seq.tabulate(60)(i =>
+      (i.toDouble, if (i % 4 == 0) None else Some((i % 7).toDouble), (i * i).toDouble))
+    val names = Seq("a b", "it's", "x`y")
+    val df = rows.toDF(names: _*)
+    val nbins = 5
+    val got = graft.stats.Stats.histogram(df, names, nbins)
+      .collect().map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
+    // per-column group-by, replayed locally over the non-null values
+    val cols = Seq(rows.map(r => Option(r._1)), rows.map(_._2), rows.map(r => Option(r._3)))
+    val want = names.zip(cols).flatMap { case (c, vs) =>
+      val xs = vs.flatten
+      val (mn, mx) = (xs.min, xs.max)
+      xs.groupBy(x => math.min(nbins - 1, math.floor((x - mn) / (mx - mn) * nbins).toInt))
+        .map { case (b, g) => (c, b) -> g.size.toLong }
+    }.toMap
+    assert(got == want)
+    assert(got.keySet.map(_._1) == names.toSet)
+  }
+
   test("seasonal anomaly rule: silent hours and spikes flag against the hour-of-day median") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

@@ -53,37 +53,37 @@ object Bench {
     ctx.updateLoggers()
   }
 
+  /** [[session]]'s own conf on top of [[Sessions.conf]]. */
+  private[graft] def sessionConf(cores: Int): Seq[(String, String)] = Seq(
+    "spark.app.name" -> s"graft-bench-$cores",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true",
+    "spark.ui.enabled" -> "false",
+    // v2 committer: task-side renames, cutting the driver-side serial
+    // commit that is pure fixed cost and biases the N->4N ratio
+    "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version" -> "2",
+    // lz4 sink codec: measured 10-20% faster than snappy on this
+    // write-heavy pipeline (16.3 s vs 18.0-20.6 s at local[8], with the
+    // PerfProbe main last held in commit b7b492f); compression stays on —
+    // raw parquet would shift cost to the page cache and misrepresent a
+    // real cluster's network/disk
+    "spark.sql.parquet.compression.codec" -> "lz4",
+    // split sizing for THIS input scale (the "size maxPartitionBytes to
+    // the data" rule): the 8M-turn input is 32×8 MB files, and default
+    // packing (128 MB cap, total/parallelism target) folds them into 8
+    // uneven splits on 8 cores (one straggler-bound wave) and THREE on
+    // 2 cores (catastrophic balance). 16 MB = one split per file: 32
+    // balanced tasks, measured 26.2→22.9 s at local[8] and 53.2→45.0 s
+    // at local[2] (BENCH.md, "Measured", run 3's split-size fix). At
+    // 100 TB the default is correct (6.5M tasks at 16 MB would swamp
+    // the scheduler) — this pins split granularity to the measured
+    // scale, same as shuffle partitions.
+    "spark.sql.files.maxPartitionBytes" -> (16L * 1024 * 1024).toString)
+
   private def session(cores: Int): SparkSession = {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-bench-$cores")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // v2 committer: task-side renames, cutting the driver-side serial
-      // commit that is pure fixed cost and biases the N->4N ratio
-      .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
-      // lz4 sink codec: measured 10-20% faster than snappy on this
-      // write-heavy pipeline (tools/PerfProbe: 16.3 s vs 18.0-20.6 s at
-      // local[8]); compression stays on — raw parquet would shift cost to
-      // the page cache and misrepresent a real cluster's network/disk
-      .config("spark.sql.parquet.compression.codec", "lz4")
-      // split sizing for THIS input scale (the "size maxPartitionBytes to
-      // the data" rule): the 8M-turn input is 32×8 MB files, and default
-      // packing (128 MB cap, total/parallelism target) folds them into 8
-      // uneven splits on 8 cores (one straggler-bound wave) and THREE on
-      // 2 cores (catastrophic balance). 16 MB = one split per file: 32
-      // balanced tasks, measured 26.2→22.9 s at local[8] and 53.2→45.0 s
-      // at local[2] (tools/SplitProbe). At 100 TB the default is correct
-      // (6.5M tasks at 16 MB would swamp the scheduler) — this pins
-      // split granularity to the measured scale, same as shuffle
-      // partitions above.
-      .config("spark.sql.files.maxPartitionBytes", 16L * 1024 * 1024)
-      .getOrCreate()
+    val s = Sessions.local(cores, sessionConf(cores): _*)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

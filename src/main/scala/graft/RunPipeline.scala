@@ -26,6 +26,14 @@ object RunPipeline {
 
   final case class BatchResult(report: Metrics.Report, committed: Int, bucketsTotal: Int)
 
+  /** [[main]]'s own session conf on top of [[Sessions.conf]]; Spark's
+    * default parquet codec stays, so the sink bytes do too.
+    */
+  private[graft] val SessionConf = Seq(
+    "spark.app.name" -> "graft-pipeline",
+    "spark.sql.adaptive.enabled" -> "true",
+    "spark.sql.adaptive.skewJoin.enabled" -> "true")
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: RunPipeline <inputDir> <outputRoot> [batchId] [nBuckets]")
     val inputDir = args(0)
@@ -33,17 +41,8 @@ object RunPipeline {
     val batchId = if (args.length > 2) args(2) else "batch-0"
     val nBuckets = if (args.length > 3) args(3).toInt else 64
 
-    val builder = SparkSession.builder()
-      .appName("graft-pipeline")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    // default master only when not provided by spark-submit
-    val spark = (if (sys.props.contains("spark.master")) builder
-                 else builder.master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-                   .config("spark.sql.shuffle.partitions",
-                     sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Sessions.local(cpus, SessionConf: _*)
     spark.sparkContext.setLogLevel("WARN")
     runBatch(spark, inputDir, outputRoot, batchId, nBuckets)
     spark.stop()

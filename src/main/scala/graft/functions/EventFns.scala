@@ -139,7 +139,8 @@ object EventFns {
     // dispatch on the fraction width instead of coalescing over failed
     // parse attempts: the old spelling paid up to THREE exception-driven
     // try_to_timestamp failures per row before the matching pattern ran
-    // (measured 3.6× slower on an all-nano column — tools/NanoProbe).
+    // (measured 3.6× slower on an all-nano column — OPTIMIZATION_r08.md
+    // §4, NanoProbe).
     // Exactly one parse attempt runs per row; the accepted fraction
     // widths (none/3/6/9, RFC3339 through RFC3339Nano) are unchanged,
     // and a width with no branch — like a width whose parse fails — is

@@ -12,7 +12,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `concat(' ', regexp_replace(w, '(.)', '$1 '))` (verified in
   * BpeTrainerSpec), but a single straight-line byte pass instead of a
   * per-character regex group substitution — the regex spelling was the
-  * dominant per-word cost of the BPE encode projection (tools/BpeProbe).
+  * dominant per-word cost of the BPE encode projection (OPTIMIZATION_r08.md
+  * §3, the BpeProbe split).
   * ASCII fast path writes bytes directly; any multi-byte input falls
   * back to a code-point walk so the regex `(.)` (code-point) semantics
   * hold for arbitrary strings too.

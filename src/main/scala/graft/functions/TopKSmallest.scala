@@ -16,10 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * array — the aggregation-shaped alternative to `row_number() OVER
   * (PARTITION BY g ORDER BY v) <= k`.
   *
-  * Why not the window — measured, not folklore (`tools/CapProbe`, 8M
-  * rows, one group owning half of them): Spark 4's `WindowGroupLimit`
-  * rule already prunes a `row_number <= k` filter map-side, so the
-  * window no longer shuffles the full corpus (pre-3.5 it did — k ROWS
+  * Why not the window — measured, not folklore (the CapProbe main, last
+  * held in commit b7b492f, 8M rows, one group owning half of them):
+  * Spark 4's `WindowGroupLimit` rule already prunes a `row_number <= k`
+  * filter map-side, so the window no longer shuffles the full corpus (pre-3.5 it did — k ROWS
   * per partition-group ship, 320k records in the probe). The
   * aggregation still ships ONE packed record per (partition, group) —
   * 32k records, 10× fewer, measured — runs no final per-group sort

@@ -130,30 +130,6 @@ object Sampling {
   def contentSplit(key: Column, valFrac: Double): Column =
     when(hash8(key) >= lit(thresholdHex(1.0 - valFrac)), "val").otherwise("train")
 
-  /** Per-group contribution cap: keep AT MOST `k` rows per group —
-    * exactly the k with the smallest `md5(id)` — the "no domain may
-    * dominate the corpus" rule (C4 and every crawl-scale pipeline cap
-    * per-site pages; rate-based [[mixtureSample]] can't give an exact
-    * per-group count). Deterministic like everything in this module:
-    * hash of the row's own id, so the SAME k rows win on any cluster
-    * size, partitioning, or rerun.
-    *
-    * Scale shape: computed with [[graft.functions.TopKSmallest]], an
-    * aggregation whose map-side partials keep O(k) per group, so the
-    * only exchange carries one packed record per (partition, group)
-    * regardless of skew and no task ever holds a full group. The
-    * `row_number() OVER (PARTITION BY group ORDER BY hash) <= k`
-    * spelling is skew-safe on Spark 4 too (`WindowGroupLimit` prunes
-    * rank filters map-side), but ships k× the shuffle records and only
-    * while the optimizer recognizes the rank-predicate pattern —
-    * measured head-to-head in `tools/CapProbe` (see the expression's
-    * scaladoc). Sort key = 16-hex md5 prefix + ":" + id — unique-id
-    * suffix makes the lexicographic order total (the oracle replays the
-    * identical string comparison).
-    *
-    * Returns `(groupCol, idCol)` of the kept rows; callers semi-join it
-    * back (on the id) to retain payload columns.
-    */
   /** GPT-style sequence PACKING — concatenate the corpus in key order
     * and chunk it into fixed-`budget` training windows (the
     * concatenate-and-chunk step of causal-LM pretraining; documents MAY
@@ -207,6 +183,30 @@ object Sampling {
         pmod(col("cum_prev"), lit(budget)).as("bin_offset"))
   }
 
+  /** Per-group contribution cap: keep AT MOST `k` rows per group —
+    * exactly the k with the smallest `md5(id)` — the "no domain may
+    * dominate the corpus" rule (C4 and every crawl-scale pipeline cap
+    * per-site pages; rate-based [[mixtureSample]] can't give an exact
+    * per-group count). Deterministic like everything in this module:
+    * hash of the row's own id, so the SAME k rows win on any cluster
+    * size, partitioning, or rerun.
+    *
+    * Scale shape: computed with [[graft.functions.TopKSmallest]], an
+    * aggregation whose map-side partials keep O(k) per group, so the
+    * only exchange carries one packed record per (partition, group)
+    * regardless of skew and no task ever holds a full group. The
+    * `row_number() OVER (PARTITION BY group ORDER BY hash) <= k`
+    * spelling is skew-safe on Spark 4 too (`WindowGroupLimit` prunes
+    * rank filters map-side), but ships k× the shuffle records and only
+    * while the optimizer recognizes the rank-predicate pattern —
+    * measured head-to-head by the CapProbe main, last held in commit
+    * b7b492f (see the expression's scaladoc). Sort key = 16-hex md5
+    * prefix + ":" + id — unique-id suffix makes the lexicographic order
+    * total (the oracle replays the identical string comparison).
+    *
+    * Returns `(groupCol, idCol)` of the kept rows; callers semi-join it
+    * back (on the id) to retain payload columns.
+    */
   def capPerGroup(df: DataFrame, groupCol: String, idCol: String,
       k: Int): DataFrame = {
     val sortKey = concat(

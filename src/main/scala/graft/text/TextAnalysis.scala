@@ -450,7 +450,8 @@ object TextAnalysis {
     // (e.g. transform(sequence(...), ...)) placed inside the aggregate
     // lambda below is out of ConstantFolding's reach and re-evaluates
     // its nBuckets-element build PER FEATURE — measured 99 s for 5k
-    // docs at sf0.1 vs 1.3 s with the literal (tools/QueryProbe)
+    // docs at sf0.1 vs 1.3 s with the literal (BENCH.md, "Data-scaling of
+    // the round-6 heavies"; the QueryProbe main, last held in b7b492f)
     val wlit = lit(weights)
     val toks = wsWords(lower(text))
     val bigrams = when(size(toks) >= 2,
@@ -475,8 +476,8 @@ object TextAnalysis {
     * makes every tree evaluate once per row — CollapseProject leaves
     * the stages alone because the aliases are non-cheap and
     * multiply-referenced. Measured 31.6 s → sub-second for 5k docs
-    * (tools/QueryProbe); semantics are the IDENTICAL expressions, only
-    * the sharing changes.
+    * (the QueryProbe main, last held in commit b7b492f); semantics are
+    * the IDENTICAL expressions, only the sharing changes.
     */
   def hashedLinearScoreDf(df: DataFrame, textCol: String,
       weights: Array[Double], nBuckets: Int, bias: Double = 0.0,

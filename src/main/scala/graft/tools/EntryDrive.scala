@@ -1,11 +1,7 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 object EntryDrive {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Sessions.local(8, "spark.ui.enabled" -> "false")
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     val df = graft.SparkEntry.entry(spark)

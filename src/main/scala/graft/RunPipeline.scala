@@ -24,6 +24,11 @@ import graft.route.Router
   */
 object RunPipeline {
 
+  /** Buckets of a commit when the command line names none; the
+    * streaming [[graft.streaming.StreamingPipeline.run]] uses it too.
+    */
+  val DefaultBuckets = 64
+
   final case class BatchResult(report: Metrics.Report, committed: Int, bucketsTotal: Int)
 
   /** [[main]]'s own session conf on top of [[Sessions.conf]]; Spark's
@@ -39,7 +44,7 @@ object RunPipeline {
     val inputDir = args(0)
     val outputRoot = args(1)
     val batchId = if (args.length > 2) args(2) else "batch-0"
-    val nBuckets = if (args.length > 3) args(3).toInt else 64
+    val nBuckets = if (args.length > 3) args(3).toInt else DefaultBuckets
 
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val spark = Sessions.local(cpus, SessionConf: _*)

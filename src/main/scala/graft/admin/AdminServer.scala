@@ -24,7 +24,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * `ReloadConfig`), then rewrites it so any watcher sees a fresh mtime.
   * The streaming surface completes the semantics: a config-driven stream
   * re-resolves its stage list at every micro-batch boundary
-  * ([[graft.streaming.StreamingPipeline.runConfigured]] — the
+  * ([[graft.streaming.StreamingPipeline.run]] over
+  * [[graft.streaming.StreamingPipeline.reloadingStages]] — the
   * processor-pool drain-then-restart semantics, `pool.go:104-111`). A
   * BATCH job's config stays immutable per submit (Spark's model), and
   * the debug entry is absent (the JVM has its own diagnostics) —
@@ -64,7 +65,7 @@ final class AdminServer(name: String = "graft", version: String = "3") {
     * returns the load error before touching app state, `app.go:266-277`).
     * Valid → the file is rewritten in place, so both reload triggers the
     * engine supports fire: content-compare streams
-    * ([[graft.streaming.StreamingPipeline.runConfigured]]) apply it at
+    * ([[graft.streaming.StreamingPipeline.reloadingStages]]) apply it at
     * the next micro-batch boundary, mtime watchers see a fresh stamp.
     */
   def registerReload(configPath: java.nio.file.Path): Unit = {

@@ -24,6 +24,8 @@ import org.apache.spark.sql.functions._
   * A resumed run skips every bucket whose marker exists and re-does the
   * rest — re-writing a bucket is idempotent (full overwrite before the
   * marker appears), so crash at ANY point yields exactly-once output.
+  * Each marker records the bucket count, and a resume under a different
+  * count is refused before anything is staged.
   *
   * Like the reference's ack-driven counters, the commit counts what it
   * ships as it ships it: the one write pass carries an observed
@@ -60,10 +62,12 @@ object Lineage {
 
   /** One sealed bucket. `sinks` is None on a marker sealed before markers
     * carried per-sink counts (then only a read-back of the bucket knows
-    * them), and empty for a frame without a sink column.
+    * them), and empty for a frame without a sink column. `nBuckets` is
+    * the bucket count the root was sealed under, None on a marker sealed
+    * before markers carried it.
     */
   final case class Entry(partitionId: Int, rows: Long, bytes: Long, batchId: String,
-      sinks: Option[Seq[SinkTally]])
+      sinks: Option[Seq[SinkTally]], nBuckets: Option[Int])
 
   private def lineageDir(root: String): Path = Paths.get(root, "lineage")
   private def dataDir(root: String, bucket: Int): Path = Paths.get(root, "data", s"p$bucket")
@@ -100,7 +104,7 @@ object Lineage {
         s.get("rows").asLong, s.get("bytes").asLong)
     }.toSeq)
     Entry(n.get("partitionId").asInt, n.get("rows").asLong, n.get("bytes").asLong,
-      n.get("batchId").asText, sinks)
+      n.get("batchId").asText, sinks, Option(n.get("nBuckets")).map(_.asInt))
   }
 
   def readEntries(spark: SparkSession, root: String): DataFrame = {
@@ -132,6 +136,7 @@ object Lineage {
     val n = mapper.createObjectNode()
       .put("partitionId", e.partitionId).put("rows", e.rows)
       .put("bytes", e.bytes).put("batchId", e.batchId)
+    e.nBuckets.foreach(n.put("nBuckets", _))
     e.sinks.foreach { ss =>
       val arr = n.putArray("sinks")
       ss.foreach(s => arr.addObject().put("sink", s.sink).put("rows", s.rows).put("bytes", s.bytes))
@@ -155,7 +160,13 @@ object Lineage {
       keyCol: String = "conv_id",
       maxBucketsToCommit: Int = Int.MaxValue): Int = {
     requireSafeBatchId(batchId)
-    val done = committed(root)
+    // a bucket is pmod(hash(key), nBuckets): resuming under another
+    // count would skip and rewrite buckets of a different key mapping
+    val markers = readMarkers(root)
+    val sealedUnder = markers.flatMap(_.nBuckets).distinct.filter(_ != nBuckets)
+    require(sealedUnder.isEmpty, s"$root was sealed with nBuckets=" +
+      s"${sealedUnder.mkString(",")}; a resume must use the same count, got $nBuckets")
+    val done = markers.map(_.partitionId).toSet
     val bucketed = df.withColumn(BucketCol, pmod(hash(col(keyCol)), lit(nBuckets)))
     val todo = bucketed.filter(!col(BucketCol).isin(done.toSeq: _*))
 
@@ -191,7 +202,7 @@ object Lineage {
         Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
         val ts = tally(b)
         writeMarker(root, Entry(b, ts.map(_.rows).sum, ts.map(_.bytes).sum, batchId,
-          Some(if (hasSink) ts.sortBy(_.sink) else Nil)))
+          Some(if (hasSink) ts.sortBy(_.sink) else Nil), Some(nBuckets)))
         committedNow += 1
       }
     }

@@ -14,20 +14,20 @@ object QueriesR6 {
   // Streaming face, driver-verified (VERDICT r5 #8): the events table
   // replayed through a REAL Structured-Streaming run — multi-file
   // source, maxFilesPerTrigger-bounded micro-batches, a YAML-configured
-  // pipeline (conditional CEL tagging + json action) inside
-  // foreachBatch, each micro-batch committed EXACTLY-ONCE through the
-  // lineage table (graft.lineage.Lineage — idempotent bucket commits,
-  // the registrar analog) — then the committed output read back as a
-  // batch table and aggregated. Per-row transforms + exactly-once
-  // append make the final table independent of micro-batch boundaries,
-  // which is what lets DuckDB oracle-check a streaming run.
+  // pipeline (conditional CEL tagging + json action) per micro-batch,
+  // each micro-batch sealed EXACTLY-ONCE by the one streaming sink,
+  // StreamingPipeline.commit (4 lineage buckets of event_id under
+  // out/batch=<id>, the registrar analog) — then the sealed output read
+  // back with StreamingPipeline.readCommitted and aggregated. Per-row
+  // transforms + exactly-once append make the final table independent
+  // of micro-batch boundaries, which is what lets DuckDB oracle-check a
+  // streaming run.
   // ---------------------------------------------------------------
   def qStreamReplay(spark: SparkSession, dir: String): DataFrame = {
+    import graft.streaming.StreamingPipeline
     val events = tbl(spark, dir, "events")
     val base = graft.util.Fs.tempDirDeletedAtExit("graft_stream_replay")
     val srcDir = s"$base/src"
-    val ckptDir = s"$base/ckpt"
-    val outRoot = s"$base/out"
 
     // decorate the events table into the pipeline envelope: dynamic
     // attributes live in the fields map (the D1 decorate step — the
@@ -53,44 +53,20 @@ object QueriesR6 {
         |  field: props
         |""".stripMargin)
 
-    val query = spark.readStream
-      .schema(decorated.schema)
-      .option("maxFilesPerTrigger", 2)
-      .parquet(srcDir)
-      .writeStream
-      .option("checkpointLocation", ckptDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val out = graft.pipeline.Pipeline(batch, stages)
-          .select(col("event_id"),
-            element_at(col(graft.model.Envelope.FieldsCol), "event_type")
-              .as("event_type"),
-            array_join(col(graft.model.Envelope.TagsCol), ",").as("tag"),
-            element_at(col(graft.model.Envelope.FieldsCol), "k")
-              .cast("long").as("k"))
-        // exactly-once commit per micro-batch: a re-delivered batch id
-        // re-stages but only ever seals uncommitted buckets
-        graft.lineage.Lineage.run(out, s"$outRoot/b$batchId", nBuckets = 4,
-          batchId = s"b$batchId", keyCol = "event_id")
-        ()
-      }
-      .start()
-    query.awaitTermination()
+    val source = spark.readStream.schema(decorated.schema)
+      .option("maxFilesPerTrigger", 2).parquet(srcDir)
+    StreamingPipeline.commit(source, s"$base/ckpt", s"$base/out", nBuckets = 4,
+        keyCol = "event_id", Trigger.AvailableNow()) { batch =>
+      graft.pipeline.Pipeline(batch, stages)
+        .select(col("event_id"),
+          element_at(col(graft.model.Envelope.FieldsCol), "event_type")
+            .as("event_type"),
+          array_join(col(graft.model.Envelope.TagsCol), ",").as("tag"),
+          element_at(col(graft.model.Envelope.FieldsCol), "k")
+            .cast("long").as("k"))
+    }.awaitTermination()
 
-    // replay the committed output as a batch table
-    val batchRoots = {
-      val d = java.nio.file.Paths.get(outRoot)
-      val ls = java.nio.file.Files.list(d)
-      try {
-        val it = ls.iterator()
-        val out = scala.collection.mutable.ArrayBuffer.empty[String]
-        while (it.hasNext) out += it.next().toString
-        out.toSeq.sorted
-      } finally ls.close()
-    }
-    require(batchRoots.nonEmpty, "streaming run committed no batches")
-    batchRoots.map(r => graft.lineage.Lineage.readData(spark, r))
-      .reduce(_ unionByName _)
+    StreamingPipeline.readCommitted(spark, s"$base/out")
       .groupBy("event_type", "tag")
       .agg(count(lit(1)).as("n_events"),
         sum(col("k")).as("sum_k"))
@@ -126,30 +102,14 @@ object QueriesR6 {
         .select((col("doc_id") + 10000000L).as("doc_id"), col("text")))
       .select(col("doc_id"), col("text"),
         timestamp_seconds(lit(1700000000L) + pmod(col("doc_id"), lit(100L))).as("ts"))
-    val base = graft.util.Fs.tempDirDeletedAtExit("graft_stream_dedup")
-    val srcDir = s"$base/src"
-    docs.repartition(8, col("doc_id")).write.mode("overwrite").parquet(srcDir)
     // deterministic micro-batch assignment (mtime order == partition
-    // order) + state partitions sized to the demo stream's ~10³-key
-    // state instead of the session's batch shuffle width — the output
-    // SET is partitioning-invariant either way, the store commits per
-    // trigger are not free
-    graft.streaming.StreamingPipeline.pinFileOrder(spark, srcDir)
-    graft.streaming.StreamingPipeline.withStatePartitions(spark, 8) {
-      val query = graft.streaming.StreamingPipeline.dedupExactStream(
-          spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 2).parquet(srcDir),
+    // order); the output SET is partitioning-invariant
+    graft.streaming.StreamingPipeline.replay(spark, "graft_stream_dedup",
+        docs.repartition(8, col("doc_id"))) { read =>
+      graft.streaming.StreamingPipeline.dedupExactStream(read(),
           textCol = "text", tsCol = "ts", horizon = "1 hour")
         .select("text")
-        .writeStream
-        .format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    spark.read.parquet(s"$base/out").select("text").orderBy("text")
+    }.orderBy("text")
   }
   val qStreamDedupSql: String =
     """SELECT text FROM (SELECT DISTINCT text FROM documents)

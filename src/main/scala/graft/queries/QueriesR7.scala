@@ -150,41 +150,24 @@ object QueriesR7 {
     * hash breaks.
     */
   def qStreamSessions(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .select(col("user_id"), col("ts").cast("timestamp").as("ts"))
     val maxTs = ev.agg(max(col("ts"))).head.getTimestamp(0) // bounded: one scalar
     val cutoff = new java.sql.Timestamp(maxTs.getTime + 24L * 3600 * 1000)
     val sentinels = ev.select(col("user_id")).distinct()
       .withColumn("ts", lit(new java.sql.Timestamp(maxTs.getTime + 48L * 3600 * 1000)))
-    val base = graft.util.Fs.tempDirDeletedAtExit("graft_stream_sessions")
     // range-partitioned by ts so file order == time order: no event is
     // late beyond the watermark when micro-batches consume files in
-    // path order (the sentinel lands in the last file by construction)
-    ev.unionByName(sentinels).repartitionByRange(4, col("ts"))
-      .write.mode("overwrite").parquet(s"$base/src")
-    // pin mtimes ascending so the time-order consumption the watermark
-    // relies on holds by construction, not by path tie-break; 8 state
-    // partitions (vs the session's batch shuffle width) cut the
-    // per-trigger store commits — session results are key-invariant
-    graft.streaming.StreamingPipeline.pinFileOrder(spark, s"$base/src")
-    graft.streaming.StreamingPipeline.withStatePartitions(spark, 8) {
-      val query = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 2).parquet(s"$base/src")
+    // order (the sentinel lands in the last file by construction)
+    graft.streaming.StreamingPipeline.replay(spark, "graft_stream_sessions",
+        ev.unionByName(sentinels).repartitionByRange(4, col("ts"))) { read =>
+      read()
         .withWatermark("ts", "30 minutes")
         .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("sw"))
         .agg(count(lit(1)).as("n_events"))
         .select(col("user_id"), col("sw.start").as("session_start"),
           col("sw.end").as("session_end"), col("n_events"))
-        .writeStream.format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
     }
-    spark.read.parquet(s"$base/out")
       .filter(col("session_start") < lit(cutoff)) // drop the sentinel sessions
       .select(col("user_id"),
         col("session_start").cast("timestamp_ntz").as("session_start"),

@@ -85,36 +85,22 @@ object QueriesR7b {
     * accumulators only, bounded by the watermark horizon.
     */
   def qStreamWindows(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .select(col("event_type"), col("ts").cast("timestamp").as("ts"))
     val maxTs = ev.agg(max(col("ts"))).head.getTimestamp(0) // bounded: one scalar
     val cutoffSec = (maxTs.getTime + 24L * 3600 * 1000) / 1000
     val sentinels = ev.select(col("event_type")).distinct()
       .withColumn("ts", lit(new java.sql.Timestamp(maxTs.getTime + 48L * 3600 * 1000)))
-    val base = graft.util.Fs.tempDirDeletedAtExit("graft_stream_windows")
-    ev.unionByName(sentinels).repartitionByRange(4, col("ts"))
-      .write.mode("overwrite").parquet(s"$base/src")
-    // pin mtimes ascending (time-order consumption by construction, not
-    // path tie-break); 8 state partitions — window counts key-invariant
-    graft.streaming.StreamingPipeline.pinFileOrder(spark, s"$base/src")
-    graft.streaming.StreamingPipeline.withStatePartitions(spark, 8) {
-      val query = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 2).parquet(s"$base/src")
+    // range-partitioned by ts: file order == time order
+    graft.streaming.StreamingPipeline.replay(spark, "graft_stream_windows",
+        ev.unionByName(sentinels).repartitionByRange(4, col("ts"))) { read =>
+      read()
         .withWatermark("ts", "30 minutes")
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n_events"))
         .select(col("w.start").cast("long").as("w_start"), col("event_type"),
           col("n_events"))
-        .writeStream.format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
     }
-    spark.read.parquet(s"$base/out")
       .filter(col("w_start") < cutoffSec) // drop the sentinel windows
       .orderBy("w_start", "event_type")
   }

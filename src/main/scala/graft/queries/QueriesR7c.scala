@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Round-7 additions, third batch: the tokenizer's ENCODE face plus
@@ -324,29 +324,31 @@ object QueriesR7c {
     * dataset release publishes: documents surviving each curation
     * stage with exact counts. Stages: raw → exact dedup (min-doc_id
     * survivor per content hash) → word band (20..2000 ws tokens, the
-    * Gopher-style length gate) → target language. Each stage is a
-    * scan-level filter over the SURVIVOR relation — one content-hash
-    * exchange total, then pure codegen predicates; the oracle replays
-    * every stage count independently, so a drifting filter or a
-    * survivor-selection change breaks the hash.
+    * Gopher-style length gate) → target language. One scan and one
+    * content-hash exchange rank every document; the four counts are
+    * conditional counts of one aggregate over the ranked frame, stacked
+    * into one row per stage. The oracle replays every stage count
+    * independently, so a drifting filter or a survivor-selection change
+    * breaks the hash.
     */
   def qCurationFunnel(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val surv = docs.withColumn("_rk", row_number().over(
-        Window.partitionBy(md5(coalesce(col("text"), lit(""))))
-          .orderBy(col("doc_id"))))
-      .filter(col("_rk") === 1)
     val words = graft.text.TextAnalysis.wsTokenCount(col("text"))
-    val st3 = surv.filter(words >= 20 && words <= 2000)
-    val st4 = st3.filter(col("lang") === "en")
-    def row(stage: Int, name: String, df: org.apache.spark.sql.DataFrame) =
-      df.agg(count(lit(1)).as("n_docs"))
-        .select(lit(stage).as("stage"), lit(name).as("name"), col("n_docs"))
-    row(1, "raw", docs)
-      .unionByName(row(2, "exact_dedup", surv))
-      .unionByName(row(3, "word_band", st3))
-      .unionByName(row(4, "lang_en", st4))
+    def stage(n: Int, name: String, cond: Column) =
+      struct(lit(n).as("stage"), lit(name).as("name"), count(when(cond, 1)).as("n_docs"))
+    // the exchange carries the hash and two flags, not the text
+    spark.read.parquet(s"$dir/documents.parquet")
+      .select(col("doc_id"), md5(coalesce(col("text"), lit(""))).as("h"),
+        (words >= 20 && words <= 2000).as("band"), (col("lang") === "en").as("en"))
+      .withColumn("surv",
+        row_number().over(Window.partitionBy("h").orderBy("doc_id")) === 1)
+      .agg(array(
+        stage(1, "raw", lit(true)),
+        stage(2, "exact_dedup", col("surv")),
+        stage(3, "word_band", col("surv") && col("band")),
+        stage(4, "lang_en", col("surv") && col("band") && col("en"))).as("f"))
+      .select(explode(col("f")).as("r"))
+      .select(col("r.stage"), col("r.name"), col("r.n_docs"))
       .orderBy("stage")
   }
 
@@ -634,42 +636,24 @@ object QueriesR7c {
     * dropped or duplicated a pair breaks the hash.
     */
   def qStreamAttrib(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val ev = spark.read.parquet(s"$dir/events.parquet")
       .select(col("user_id"), col("event_type"),
         col("ts").cast("timestamp").as("ts"))
-    val base = graft.util.Fs.tempDirDeletedAtExit("graft_stream_attrib")
-    ev.repartitionByRange(4, col("ts"))
-      .write.mode("overwrite").parquet(s"$base/src")
     // the completeness claim below REQUIRES event-time-ordered file
-    // consumption; pin mtimes ascending so it holds by construction
-    // (previously only the path tie-break on near-identical mtimes
-    // guaranteed it). 8 state partitions: a stream-stream join runs
-    // FOUR state stores per partition per trigger — at the session's
-    // batch shuffle width that is pure commit overhead for this state
-    // volume, and join results are key-invariant.
-    graft.streaming.StreamingPipeline.pinFileOrder(spark, s"$base/src")
-    graft.streaming.StreamingPipeline.withStatePartitions(spark, 8) {
-      def side(tpe: String, alias: String) = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 2).parquet(s"$base/src")
+    // consumption: range-partitioned by ts, file order pinned by replay
+    graft.streaming.StreamingPipeline.replay(spark, "graft_stream_attrib",
+        ev.repartitionByRange(4, col("ts"))) { read =>
+      def side(tpe: String, alias: String) = read()
         .filter(col("event_type") === tpe)
         .select(col("user_id").as(s"${alias}_user"), col("ts").as(s"${alias}_ts"))
         .withWatermark(s"${alias}_ts", "1 hour")
-      val query = side("view", "v").join(side("click", "c"),
+      side("view", "v").join(side("click", "c"),
           col("v_user") === col("c_user") &&
             col("c_ts") >= col("v_ts") &&
             col("c_ts") <= col("v_ts") + expr("interval 1 hour"))
         .select(col("v_user").as("user_id"), col("v_ts").as("view_ts"),
           col("c_ts").as("click_ts"))
-        .writeStream.format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
     }
-    spark.read.parquet(s"$base/out")
       .select(col("user_id"),
         col("view_ts").cast("timestamp_ntz").as("view_ts"),
         col("click_ts").cast("timestamp_ntz").as("click_ts"))

@@ -1,12 +1,18 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.lineage.Lineage
 import graft.model.Turn
+import graft.pipeline.Stage
 import graft.route.Router
-import graft.TranscriptPipeline
+import graft.{RunPipeline, TranscriptPipeline}
 
 /** Structured-Streaming face of the engine — the same stage functions the
   * batch path uses, run per micro-batch. This is the direct analog of the
@@ -17,36 +23,24 @@ import graft.TranscriptPipeline
   *     registrar, maintained by Spark;
   *   - `maxFilesPerTrigger` ↔ spool-size batching / in-flight bounds
   *     (`lc-lib/spooler/spooler.go:85-166`);
-  *   - foreachBatch with idempotent per-batch output ↔ ordered
-  *     acknowledgement upgraded to exactly-once batch commits.
+  *   - one sink, [[commit]]: each micro-batch is sealed through
+  *     [[graft.lineage.Lineage.run]] under `outRoot/batch=<id>`, the same
+  *     exactly-once bucket commit a batch run makes (markers, per-sink
+  *     tallies, no-fork writes). The registrar advances offsets only after
+  *     the chain acked (`event_ack.go:37-66`); here Spark logs a batch as
+  *     done only after its commit returned, and a re-delivered batch id
+  *     seals only the buckets a crash left unsealed.
   */
 object StreamingPipeline {
 
-  /** Run `body` (build + start + await a streaming query) with
-    * `spark.sql.shuffle.partitions` pinned to the stream's STATE
-    * partition count, restoring the session value afterwards. A
-    * stateful stream fixes its state-store partition count from the
-    * shuffle setting at the FIRST micro-batch and every later batch
-    * pays (partitions × state stores) open/commit round-trips per
-    * trigger — pure fixed cost when state is small. The default comes
-    * from `spark.graft.stream.statePartitions` (conf, so a production
-    * deployment sizes it to state volume — ~10⁵-10⁶ keys per partition
-    * is a sane target — without touching code); absent that, `n`.
-    * Batch-query planning after `body` returns is unaffected: the
-    * session value is restored before the caller's next plan.
+  /** Shuffle partitions while a replayed stateful stream runs
+    * ([[replay]]). A stateful stream fixes its state-store partition
+    * count from the shuffle setting at its FIRST micro-batch, and every
+    * later batch pays (partitions × state stores) open/commit round-trips
+    * per trigger — pure fixed cost for the replays' ~10³-key state. Their
+    * results are partitioning-invariant.
     */
-  def withStatePartitions[T](spark: SparkSession, n: Int)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(key)
-    val target = spark.conf.getOption("spark.graft.stream.statePartitions")
-      .map(_.toInt).getOrElse(n)
-    spark.conf.set(key, target)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  private val StatePartitions = 8
 
   /** Order a directory's part files by ascending name → strictly
     * ascending modification time, so `FileStreamSource`'s
@@ -58,7 +52,7 @@ object StreamingPipeline {
     * path tie-break. Driver-side, one listing + one setTimes per file —
     * file-count-bounded, no data pass.
     */
-  def pinFileOrder(spark: SparkSession, dir: String): Unit = {
+  private def pinFileOrder(spark: SparkSession, dir: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val parts = fs.listStatus(p).map(_.getPath)
@@ -87,7 +81,7 @@ object StreamingPipeline {
     * fixed-cost-dominated and scaling efficiency collapses. Returns None
     * when sized adequately or when the input can't be listed yet (an
     * empty source directory says nothing about eventual file sizes).
-    * Called at stream start by [[run]]/[[runConfigured]]; the warning
+    * Called at stream start by [[run]]; the warning
     * logs, never throws — undersized triggers are legitimate for
     * latency-bound streams, the cost just has to be a visible choice.
     */
@@ -119,41 +113,77 @@ object StreamingPipeline {
       .foreach(System.err.println)
     catch { case _: Exception => () } // advisory only — never block a stream
 
-  /** Run the full parse→enrich→route pipeline as a stream over a growing
-    * parquet directory; each micro-batch lands routed output under
-    * `outDir/batch=<id>` (idempotent per batch id — reprocessing a batch
-    * overwrites the same directory).
+  /** The one streaming sink: seal each micro-batch of `stream` exactly
+    * once. `perBatch` maps the micro-batch to its output, and
+    * [[graft.lineage.Lineage.run]] commits it, meta columns stripped,
+    * into `nBuckets` buckets of `keyCol` under `outRoot/batch=<id>` —
+    * one lineage root per micro-batch id. A batch that failed mid-commit
+    * is re-delivered with the same id and data on restart from
+    * `checkpointDir`, and re-seals only its unsealed buckets.
+    */
+  def commit(stream: DataFrame, checkpointDir: String, outRoot: String,
+      nBuckets: Int, keyCol: String, trigger: Trigger)(
+      perBatch: DataFrame => DataFrame): StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .trigger(trigger)
+      .foreachBatch { (batch: DataFrame, id: Long) =>
+        Lineage.run(Router.stripMeta(perBatch(batch)), s"$outRoot/batch=$id", nBuckets,
+          batchId = id.toString, keyCol = keyCol)
+        ()
+      }
+      .start()
+
+  /** Everything [[commit]] sealed under `outRoot`: the sealed buckets of
+    * every `batch=<id>` root, in batch-id order. An unsealed bucket of a
+    * batch that failed mid-commit is not read.
+    */
+  def readCommitted(spark: SparkSession, outRoot: String): DataFrame = {
+    val dir = Paths.get(outRoot)
+    val batches = if (!Files.isDirectory(dir)) Nil else {
+      val ls = Files.list(dir)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("batch=")).toSeq
+      finally ls.close()
+    }
+    val roots = batches.sortBy(_.stripPrefix("batch=").toLong).map(b => s"$outRoot/$b")
+      .filter(r => Lineage.committed(r).nonEmpty)
+    require(roots.nonEmpty, s"no sealed micro-batch under $outRoot")
+    roots.map(Lineage.readData(spark, _)).reduce(_ unionByName _)
+  }
+
+  /** Run the parse→enrich→route pipeline as a stream over a growing
+    * parquet directory. Each micro-batch runs
+    * `TranscriptPipeline.run(spark, batch, stages())`, as `RunPipeline`
+    * does with its built-in or `GRAFT_PIPELINE_CONFIG` stage list, and
+    * [[commit]] seals it into `RunPipeline.DefaultBuckets` buckets of
+    * `conv_id` under `outRoot/batch=<id>`; [[readCommitted]] reads it
+    * back. `stages` is called once per micro-batch, so
+    * [[reloadingStages]] makes the stream follow a config file.
     */
   def run(spark: SparkSession, inputDir: String, checkpointDir: String,
-      outDir: String, maxFilesPerTrigger: Int = 8): StreamingQuery = {
+      outRoot: String, maxFilesPerTrigger: Int = 8,
+      trigger: Trigger = Trigger.AvailableNow(),
+      stages: () => Seq[Stage] = () => TranscriptPipeline.stages): StreamingQuery = {
     warnTriggerSizing(spark, inputDir, maxFilesPerTrigger)
     val turns = spark.readStream
       .schema(Turn.schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(inputDir)
-    turns.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val assigned = TranscriptPipeline.run(batch.sparkSession, batch)
-        Router.stripMeta(assigned)
-          .write.mode("overwrite")
-          .partitionBy(Router.SinkCol)
-          .parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
+    commit(turns, checkpointDir, outRoot, RunPipeline.DefaultBuckets, "conv_id", trigger) { batch =>
+      TranscriptPipeline.run(batch.sparkSession, batch, stages())
+    }
   }
 
-  /** Config-driven streaming run with LIVE config reload — the
+  /** A stage supplier for [[run]] that follows `configPath` LIVE — the
     * processor-pool reload semantics (`lc-lib/processor/pool.go:104-111`:
     * on a config change the pool drains in-flight events under the old
     * config, then restarts its routines with the new one; events never
-    * see a half-applied config). The Spark analog: the pipeline stage
-    * list is re-resolved from `configPath` at each micro-batch boundary —
-    * the batch in flight finishes under the config it started with, the
-    * next batch picks up the edit. Triggering a reload = writing the
-    * config file (the admin-API reload command maps to exactly that).
+    * see a half-applied config). [[run]] calls it at each micro-batch
+    * boundary: the batch in flight finishes under the config it started
+    * with, the next batch picks up the edit. Triggering a reload =
+    * writing the config file (the admin-API reload command maps to
+    * exactly that).
     *
     * Robustness matching the reference: the config is re-read by CONTENT
     * (full-text comparison each batch — configs are small, and neither
@@ -164,16 +194,13 @@ object StreamingPipeline {
     * dies on a bad reload; it logs and carries on). Only the very first
     * batch, with no good config yet, propagates the parse error.
     */
-  def runConfigured(spark: SparkSession, inputDir: String, checkpointDir: String,
-      outDir: String, configPath: String, maxFilesPerTrigger: Int = 8,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    warnTriggerSizing(spark, inputDir, maxFilesPerTrigger)
-    val path = java.nio.file.Paths.get(configPath)
-    @volatile var cached: (String, Seq[graft.pipeline.Stage]) = null
-    def stagesNow(): Seq[graft.pipeline.Stage] = {
+  def reloadingStages(configPath: String): () => Seq[Stage] = {
+    val path = Paths.get(configPath)
+    @volatile var cached: (String, Seq[Stage]) = null
+    () => {
       val c = cached
       try {
-        val text = java.nio.file.Files.readString(path) // configs are small
+        val text = Files.readString(path) // configs are small
         if (c == null || c._1 != text) { // full-text compare: no hash-collision hole
           // dialect by extension/sniff: the reference's watched configs
           // are YAML (testing/*.yaml); our JSON dialect stays accepted
@@ -187,21 +214,37 @@ object StreamingPipeline {
           c._2
       }
     }
-    val turns = spark.readStream
-      .schema(Turn.schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inputDir)
-    turns.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val processed = graft.pipeline.Pipeline(batch, stagesNow())
-        Router.stripMeta(processed)
-          .write.mode("overwrite")
-          .parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .start()
+  }
+
+  /** The replay scaffold of the file-sink driver queries: write the
+    * ordered `source` frame to a temp dir, pin its file order, and run
+    * the streaming query `build` makes from a reader of it (call the
+    * reader once per stream side) — 2 files per trigger,
+    * `StatePartitions` state partitions, `AvailableNow`, append-mode
+    * parquet sink. Returns the sink read back as a batch table.
+    */
+  def replay(spark: SparkSession, name: String, source: DataFrame)(
+      build: (() => DataFrame) => DataFrame): DataFrame = {
+    val base = graft.util.Fs.tempDirDeletedAtExit(name)
+    source.write.mode("overwrite").parquet(s"$base/src")
+    pinFileOrder(spark, s"$base/src")
+    val read = () => spark.readStream.schema(source.schema)
+      .option("maxFilesPerTrigger", 2).parquet(s"$base/src")
+    // the session value comes back before the caller's next batch plan
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, StatePartitions)
+    try build(read).writeStream.format("parquet")
+      .option("path", s"$base/out")
+      .option("checkpointLocation", s"$base/ckpt")
+      .outputMode("append")
+      .trigger(Trigger.AvailableNow())
+      .start().awaitTermination()
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+    spark.read.parquet(s"$base/out")
   }
 
   /** Streaming multiline-timeout analog (`previous timeout`,

@@ -116,5 +116,7 @@ object PlanShapeSpec {
     Row("q_source_overlap", Seq(noLoopJoin)),
     Row("q_seasonal_anomaly", Seq(noCorpusWideShuffle)),
     // one stacked Generate and one count aggregate
-    Row("q_profile_hist", Seq(oneScan, exactly[GenerateExec](1, "Generate"), hashShuffles(1))))
+    Row("q_profile_hist", Seq(oneScan, exactly[GenerateExec](1, "Generate"), hashShuffles(1))),
+    // every stage count comes from one ranking of one scan
+    Row("q_curation_funnel", Seq(oneScan, hashShuffles(1))))
 }

@@ -120,16 +120,16 @@ class AdminServerSpec extends AnyFunSuite {
     val speeds = graft.streaming.StreamingPipeline.attachSpeedListener(spark)
     val srv = AdminServer.forSpark(spark, speeds, configPath = Some(cfgPath))
     val addr = srv.start()
-    val q = graft.streaming.StreamingPipeline.runConfigured(
-      spark, inputDir, s"$tmp/ckpt", s"$tmp/out", cfgPath.toString,
-      maxFilesPerTrigger = 64,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(300))
+    val q = graft.streaming.StreamingPipeline.run(
+      spark, inputDir, s"$tmp/ckpt", s"$tmp/out", maxFilesPerTrigger = 64,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(300),
+      stages = graft.streaming.StreamingPipeline.reloadingStages(cfgPath.toString))
     try {
       def sealedBatches: Set[String] = {
         val d = new java.io.File(s"$tmp/out")
         if (!d.isDirectory) Set.empty
         else d.listFiles().filter(f => f.isDirectory && f.getName.startsWith("batch=")
-            && new java.io.File(f, "_SUCCESS").exists()).map(_.getName).toSet
+            && graft.lineage.Lineage.committed(f.getPath).nonEmpty).map(_.getName).toSet
       }
       val deadline = System.currentTimeMillis() + 60000
       while (sealedBatches.isEmpty && System.currentTimeMillis() < deadline)
@@ -164,7 +164,7 @@ class AdminServerSpec extends AnyFunSuite {
         Thread.sleep(200)
       assert(sealedBatches != mid, "stream must keep running after a failed reload")
     } finally { q.stop(); srv.stop() }
-    val out = spark.read.option("basePath", s"$tmp/out").parquet(s"$tmp/out/batch=*")
+    val out = graft.streaming.StreamingPipeline.readCommitted(spark, s"$tmp/out")
     val tags = out.select(explode(col("tags")).as("tag")).distinct()
       .collect().map(_.getString(0)).toSet
     assert(tags.contains("cfg_v1") && tags.contains("cfg_v2"),

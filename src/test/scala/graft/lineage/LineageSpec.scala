@@ -73,6 +73,25 @@ class LineageSpec extends SparkTestBase {
     assert(c.exceptAll(a).isEmpty && a.exceptAll(c).isEmpty)
   }
 
+  test("a resume under a different nBuckets is refused before anything is staged") {
+    val root = freshRoot()
+    Lineage.run(turns, root, nBuckets = 8, batchId = "b1", maxBucketsToCommit = 3)
+    assert(Lineage.readMarkers(root).forall(_.nBuckets.contains(8)))
+    val e = intercept[IllegalArgumentException](
+      Lineage.run(turns, root, nBuckets = 4, batchId = "b2"))
+    assert(e.getMessage.contains("nBuckets=8"))
+    assert(!Files.exists(java.nio.file.Paths.get(root, "_staging_b2")))
+    assert(Lineage.committed(root).size == 3)
+    // markers sealed before they carried the count are not checked
+    val dir = java.nio.file.Paths.get(root, "lineage")
+    val ls = Files.list(dir)
+    try ls.forEach(p => Files.writeString(p, Files.readString(p).replace(",\"nBuckets\":8", "")))
+    finally ls.close()
+    assert(Lineage.readMarkers(root).forall(_.nBuckets.isEmpty))
+    Lineage.run(turns, root, nBuckets = 8, batchId = "b3")
+    assert(Lineage.readData(spark, root).count() == turns.count())
+  }
+
   test("rerun of a fully committed root is a no-op") {
     val root = freshRoot()
     Lineage.run(turns, root, nBuckets = 4, batchId = "b1")

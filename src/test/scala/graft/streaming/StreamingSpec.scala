@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 
 import graft.SparkTestBase
+import graft.lineage.Lineage
 import graft.model.TranscriptGen
 import graft.route.Router
 import graft.TranscriptPipeline
@@ -41,9 +42,7 @@ class StreamingSpec extends SparkTestBase {
       maxFilesPerTrigger = 2)
     q.awaitTermination(120000)
 
-    val streamed = spark.read
-      .option("basePath", s"$tmp/out")
-      .parquet(s"$tmp/out/batch=*")
+    val streamed = StreamingPipeline.readCommitted(spark, s"$tmp/out")
     val batch = Router.stripMeta(TranscriptPipeline.run(spark, turns))
 
     assert(streamed.count() == batch.count())
@@ -138,7 +137,7 @@ class StreamingSpec extends SparkTestBase {
     StreamingPipeline.run(spark, in, ckpt, out, maxFilesPerTrigger = 1)
       .awaitTermination(120000)
 
-    val streamed = spark.read.option("basePath", out).parquet(s"$out/batch=*")
+    val streamed = StreamingPipeline.readCommitted(spark, out)
     assert(streamed.count() == all.count(), "no loss, no duplication across restart")
     assert(new java.io.File(out).list().count(_.startsWith("batch=")) > batchesAfterFirst)
     val sTexts = streamed.select("conv_id", "turn_idx", "text").collect()
@@ -146,6 +145,51 @@ class StreamingSpec extends SparkTestBase {
     val aTexts = all.select("conv_id", "turn_idx", "text").collect()
       .map(r => (r.getString(0), r.getInt(1)) -> r.getString(2)).toMap
     assert(sTexts == aTexts)
+  }
+
+  test("a micro-batch that fails mid-commit re-seals only its unsealed buckets on restart") {
+    val tmp = Files.createTempDirectory("graft-stream-crash").toString
+    val in = s"$tmp/in"
+    val all = TranscriptGen.generate(spark, seed = 37L, nConvs = 24L, parallelism = 2).toDF()
+    val first = all.filter(col("conv_id") < TranscriptGen.convId(12))
+    val second = all.filter(col("conv_id") >= TranscriptGen.convId(12))
+    // one file each, one file per trigger: batch 0 is `first`, batch 1 `second`
+    first.repartition(1).write.mode("append").parquet(in)
+    second.repartition(1).write.mode("append").parquet(in)
+    def runTo(out: String) =
+      StreamingPipeline.run(spark, in, s"$out-ckpt", out, maxFilesPerTrigger = 1)
+
+    runTo(s"$tmp/clean").awaitTermination(120000)
+
+    // break the seal of batch 1's highest bucket: a directory where its
+    // marker's tmp file goes, so the commit throws after sealing the
+    // lower buckets
+    val buckets = second.select(pmod(hash(col("conv_id")), lit(64))).distinct()
+      .collect().map(_.getInt(0)).sorted
+    assert(buckets.length > 1)
+    val blocker = java.nio.file.Paths.get(s"$tmp/out/batch=1/lineage/p${buckets.last}.json.tmp")
+    Files.createDirectories(blocker)
+    Files.writeString(blocker.resolve("x"), "x")
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      runTo(s"$tmp/out").awaitTermination(120000))
+    assert(Lineage.committed(s"$tmp/out/batch=1") == buckets.init.toSet)
+
+    graft.util.Fs.deleteRecursively(blocker)
+    runTo(s"$tmp/out").awaitTermination(120000)
+
+    def rows(out: String) = StreamingPipeline.readCommitted(spark, out)
+      .select("conv_id", "turn_idx", "text", Router.SinkCol).collect()
+      .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(3))).toSeq.sorted
+    val got = rows(s"$tmp/out")
+    assert(got == rows(s"$tmp/clean"))
+    assert(got.length == all.count())
+    // every bucket of every batch root carries exactly one marker
+    for (b <- Seq("batch=0", "batch=1")) {
+      val root = java.nio.file.Paths.get(s"$tmp/out/$b")
+      val data = root.resolve("data").toFile.list().toSeq
+      val marks = root.resolve("lineage").toFile.list().toSeq
+      assert(marks.sorted == data.map(p => s"$p.json").sorted, b)
+    }
   }
 
   test("live config reload at micro-batch boundaries (processor pool reload, pool.go:104-111)") {
@@ -162,15 +206,16 @@ class StreamingSpec extends SparkTestBase {
     val turns = TranscriptGen.generate(spark, seed = 71L, nConvs = 6L, parallelism = 1).toDF()
     turns.limit(5).write.mode("append").parquet(inputDir)
 
-    val q = StreamingPipeline.runConfigured(spark, inputDir, s"$tmp/ckpt", s"$tmp/out",
-      cfgPath.toString, maxFilesPerTrigger = 64,
-      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(300))
+    val q = StreamingPipeline.run(spark, inputDir, s"$tmp/ckpt", s"$tmp/out",
+      maxFilesPerTrigger = 64,
+      trigger = org.apache.spark.sql.streaming.Trigger.ProcessingTime(300),
+      stages = StreamingPipeline.reloadingStages(cfgPath.toString))
     try {
       def batches: Seq[String] = {
         val d = new java.io.File(s"$tmp/out")
         if (!d.isDirectory) Seq.empty
         else d.listFiles().filter(f => f.isDirectory && f.getName.startsWith("batch=")
-            && new java.io.File(f, "_SUCCESS").exists()) // only sealed batches
+            && Lineage.committed(f.getPath).nonEmpty) // only sealed batches
           .map(_.getName).toSeq.sorted
       }
       val deadline = System.currentTimeMillis() + 60000
@@ -186,7 +231,7 @@ class StreamingSpec extends SparkTestBase {
         Thread.sleep(200)
       assert(batches.toSet != firstBatches, "a post-edit batch should land")
     } finally q.stop()
-    val out = spark.read.option("basePath", s"$tmp/out").parquet(s"$tmp/out/batch=*")
+    val out = StreamingPipeline.readCommitted(spark, s"$tmp/out")
     val tags = out.select(explode(col("tags")).as("tag")).distinct()
       .collect().map(_.getString(0)).toSet
     assert(tags.contains("cfg_v1") && tags.contains("cfg_v2"),

@@ -18,6 +18,7 @@ import graft.SparkTestBase
 import graft.lineage.Lineage
 import graft.model.TranscriptGen
 import graft.route.{Router, Sink}
+import graft.streaming.StreamingPipeline
 
 class NoForkLocalFileSystemSpec extends SparkTestBase {
 
@@ -106,13 +107,19 @@ class NoForkLocalFileSystemSpec extends SparkTestBase {
     FileSystem.get(new URI("file:///"), spark.sparkContext.hadoopConfiguration)
     val turns = TranscriptGen.generate(spark, seed = 5L, nConvs = 12L, parallelism = 2).toDF()
     val routed = Router.assign(turns, Seq(Sink("tools", col("tool") =!= "none")), "main")
+    // the stream's input and checkpoint live outside the output root
+    val streamIn = Files.createTempDirectory("graft-nofork-in")
+    turns.write.mode("overwrite").parquet(streamIn.toString)
     val root = Files.createTempDirectory("graft-nofork-run")
     val marker = root.getFileName.toString
     val spawned = chmodsNaming(marker) {
       assert(Lineage.run(routed, root.resolve("lineage").toString, nBuckets = 4, batchId = "b1") > 0)
       Router.write(routed, root.resolve("routed").toString)
+      StreamingPipeline.run(spark, streamIn.toString, s"$streamIn-ckpt",
+        root.resolve("stream").toString).awaitTermination(120000)
     }
     assert(spawned == 0)
+    assert(Lineage.committed(root.resolve("stream/batch=0").toString).nonEmpty)
     assert(Files.exists(root.resolve("routed/_template.json")))
     val control = Files.createTempDirectory("graft-plain-run")
     val controlSpawned = chmodsNaming(control.getFileName.toString) {

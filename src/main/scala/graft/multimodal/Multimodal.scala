@@ -158,28 +158,18 @@ object Multimodal {
     */
   def fakeDecode(r: MediaRow): MediaFeatures = {
     val n = r.payload.length.toLong
-    var checksum = 0xcbf29ce484222325L
-    var i = 0
-    while (i < r.payload.length) {
-      checksum ^= (r.payload(i) & 0xffL); checksum *= 0x100000001b3L; i += 1
-    }
     MediaFeatures(r.media_id, r.modality, n,
       width = (n % 640).toInt,
       height = ((n * 7) % 480).toInt,
       n_frames = (n / 1000 + 1).toInt,
-      checksum = checksum,
+      checksum = fnv(r.payload),
       codec = "stub")
   }
 
-  /** FNV-1a over a byte array — the shared checksum for both the fake
-    * and the decoded-raster paths.
+  /** FNV-1a over a byte array ([[graft.dedup.Hashes.fnv64]]) — the
+    * checksum for both the fake and the decoded-raster paths.
     */
-  def fnv(bytes: Array[Byte]): Long = {
-    var h = 0xcbf29ce484222325L
-    var i = 0
-    while (i < bytes.length) { h ^= (bytes(i) & 0xffL); h *= 0x100000001b3L; i += 1 }
-    h
-  }
+  def fnv(bytes: Array[Byte]): Long = graft.dedup.Hashes.fnv64(bytes)
 
   /** Partition-batched decode: one task per partition iterates its rows —
     * the shape that lets a real codec amortise per-batch init exactly

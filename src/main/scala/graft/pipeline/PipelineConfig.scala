@@ -7,10 +7,14 @@ import graft.grok.Grok
 
 /** Config-driven pipeline construction — the Log Carver `pipelines`
   * section (`lc-lib/processor/config.go:66-150`: a list of actions and
-  * `if / else if / else` blocks) accepted as JSON (the reference parses
-  * YAML/JSON into the same structures; this container ships Jackson's
-  * JSON codec only). Example, mirroring the canonical nginx pipeline in
-  * `testing/log-carver.yaml`:
+  * `if / else if / else` blocks), read from JSON (Jackson) or YAML
+  * ([[graft.util.Yaml]], SnakeYAML's event stream) into one Jackson tree
+  * and compiled by one stage-list reader, like the reference parses
+  * YAML/JSON into the same structures. Two spellings of a stage mix
+  * freely: the reference's `name:`-keyed actions with sibling `else if` /
+  * `else` entries (see [[fromYaml]]), and this JSON dialect of single-key
+  * actions whose conditional carries its own branches. Example, mirroring
+  * the canonical nginx pipeline in `testing/log-carver.yaml`:
   *
   * {{{
   * [
@@ -57,8 +61,7 @@ object PipelineConfig {
     val text = java.nio.file.Files.readString(path)
     val root = parseTree(text, path.toString)
     val stages =
-      if (root.isObject && root.has("pipelines"))
-        fromReferenceAst(root.get("pipelines"), grok)
+      if (root.isObject && root.has("pipelines")) stageList(root, grok)
       else Seq.empty
     val base = Option(path.toAbsolutePath.getParent)
       .getOrElse(java.nio.file.Paths.get("/"))
@@ -82,6 +85,10 @@ object PipelineConfig {
     ConfigDocument(stages, own ++ included)
   }
 
+  /** The one JSON-or-YAML dispatch: the extension decides when present;
+    * otherwise a JSON document starts with `[`/`{` and anything else is
+    * YAML (the reference's native form).
+    */
   private def parseTree(text: String, pathHint: String): JsonNode = {
     val lower = pathHint.toLowerCase
     val head = text.dropWhile(_.isWhitespace)
@@ -90,6 +97,17 @@ object PipelineConfig {
           (head.startsWith("[") || head.startsWith("{"))))
       JsonFlatten.mapper.readTree(text)
     else JsonFlatten.mapper.valueToTree(graft.util.Yaml.parse(text))
+  }
+
+  /** The stages of a parsed document: its `pipelines` list, or the root
+    * itself when that is a bare stage list.
+    */
+  private def stageList(root: JsonNode, grok: Grok): Seq[Stage] = {
+    val list =
+      if (root.isObject && root.has("pipelines")) root.get("pipelines") else root
+    require(list.isArray,
+      "pipeline config must be a list of stages (or a config document with 'pipelines')")
+    fromReferenceAst(list, grok)
   }
 
   private def fileGroups(arr: JsonNode, where: String): Seq[FileGroup] = {
@@ -115,11 +133,8 @@ object PipelineConfig {
     }.toSeq
   }
 
-  def fromJson(json: String, grok: Grok = Grok.default): Seq[Stage] = {
-    val root = JsonFlatten.mapper.readTree(json)
-    require(root.isArray, "pipeline config must be a JSON array of stages")
-    parseStages(root, grok)
-  }
+  def fromJson(json: String, grok: Grok = Grok.default): Seq[Stage] =
+    fromText(json, ".json", grok)
 
   /** The reference's native config form — YAML (`lc-lib/config/parser.go`
     * feeds go-yaml; every shipped config under `testing/` is YAML).
@@ -147,108 +162,68 @@ object PipelineConfig {
     * Our JSON dialect's single-key action objects are also accepted per
     * entry, so the two spellings can mix.
     */
-  def fromYaml(yaml: String, grok: Grok = Grok.default): Seq[Stage] = {
-    val parsed = graft.util.Yaml.parse(yaml)
-    val root: JsonNode = JsonFlatten.mapper.valueToTree(parsed)
-    val list =
-      if (root.isObject && root.has("pipelines")) root.get("pipelines") else root
-    require(list.isArray,
-      "pipeline YAML must be a list of entries (or a config document with 'pipelines')")
-    fromReferenceAst(list, grok)
-  }
+  def fromYaml(yaml: String, grok: Grok = Grok.default): Seq[Stage] =
+    fromText(yaml, ".yaml", grok)
 
-  /** Dialect dispatch for watched config files (live reload, admin
-    * validate): extension decides when present; otherwise a JSON
-    * document starts with `[`/`{` and anything else is YAML (the
-    * reference's native form).
+  /** Stages from a config file's text (live reload, admin validate),
+    * JSON or YAML by [[parseTree]]'s dispatch on `pathHint` and content.
     */
-  def fromText(text: String, pathHint: String = "", grok: Grok = Grok.default): Seq[Stage] = {
-    val lower = pathHint.toLowerCase
-    if (lower.endsWith(".yaml") || lower.endsWith(".yml")) fromYaml(text, grok)
-    else if (lower.endsWith(".json")) fromJson(text, grok)
-    else {
-      val head = text.dropWhile(_.isWhitespace)
-      if (head.startsWith("[") || head.startsWith("{")) fromJson(text, grok)
-      else fromYaml(text, grok)
-    }
-  }
+  def fromText(text: String, pathHint: String = "", grok: Grok = Grok.default): Seq[Stage] =
+    stageList(parseTree(text, pathHint), grok)
 
-  /** State machine over sibling entries, mirroring `config.go:66-150`:
-    * an `if` opens a conditional; following `else if` entries extend it;
-    * a following `else` closes it; anything else (a `name:` action or a
-    * single-key JSON-dialect stage) emits directly.
+  /** The one stage-list reader, a state machine over sibling entries
+    * mirroring `config.go:66-150`: an `if` opens a conditional; following
+    * `else if` entries extend it; a following `else` closes it; anything
+    * else (a `name:` action or a single-key JSON-dialect stage) emits
+    * directly. A JSON-dialect conditional carries its branches itself —
+    * an `else if` list of `{"if", "then"}` and an `else` — and then takes
+    * no sibling branches.
     */
   private def fromReferenceAst(arr: JsonNode, grok: Grok): Seq[Stage] = {
     import scala.jdk.CollectionConverters._
     val entries = arr.elements().asScala.toVector
     val out = scala.collection.mutable.ArrayBuffer.empty[Stage]
+    def branch(e: JsonNode, key: String): (String, Seq[Stage]) = {
+      require(e.has(key) && e.has("then"), s"'$key' entry missing its 'then' action list: $e")
+      e.get(key).asText() -> fromReferenceAst(e.get("then"), grok)
+    }
     var i = 0
     while (i < entries.length) {
       val e = entries(i)
       require(e.isObject, s"pipeline entry must be a mapping: $e")
+      i += 1
       if (e.has("if")) {
-        val branches = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[Stage])]
-        require(e.has("then"), s"'if' entry missing its 'then' action list: $e")
-        branches += e.get("if").asText() -> fromReferenceAst(e.get("then"), grok)
-        i += 1
-        while (i < entries.length && entries(i).has("else if")) {
-          require(entries(i).has("then"),
-            s"'else if' entry missing its 'then' action list: ${entries(i)}")
-          branches += entries(i).get("else if").asText() ->
-            fromReferenceAst(entries(i).get("then"), grok)
+        val branches = scala.collection.mutable.ArrayBuffer(branch(e, "if"))
+        if (e.has("else if")) {
+          require(e.get("else if").isArray, s"'else if' of an 'if' entry must be a list: $e")
+          branches ++= e.get("else if").elements().asScala.map(branch(_, "if"))
+        }
+        var otherwise = Option(e.get("else")).map(fromReferenceAst(_, grok))
+        while (otherwise.isEmpty && i < entries.length && entries(i).has("else if")) {
+          branches += branch(entries(i), "else if")
           i += 1
         }
-        val otherwise =
-          if (i < entries.length && entries(i).has("else")) {
-            val o = fromReferenceAst(entries(i).get("else"), grok)
-            i += 1
-            o
-          } else Seq.empty
-        out += ConditionalStage(branches.toSeq, otherwise)
+        if (otherwise.isEmpty && i < entries.length && entries(i).has("else")) {
+          otherwise = Some(fromReferenceAst(entries(i).get("else"), grok))
+          i += 1
+        }
+        out += ConditionalStage(branches.toSeq, otherwise.getOrElse(Seq.empty))
       } else if (e.has("else if") || e.has("else")) {
         throw new IllegalArgumentException(
           s"'else if'/'else' without a preceding 'if' (config.go:120-137): $e")
       } else if (e.has("name")) {
         out += parseAction(e.get("name").asText(), e, grok)
-        i += 1
       } else {
-        out += parseStage(e, grok)
-        i += 1
+        val name = e.fieldNames().next()
+        out += parseAction(name, e.get(name), grok)
       }
     }
     out.toSeq
   }
 
-  private def parseStages(arr: JsonNode, grok: Grok): Seq[Stage] = {
-    import scala.jdk.CollectionConverters._
-    arr.elements().asScala.map(parseStage(_, grok)).toSeq
-  }
-
   private def strings(n: JsonNode): Seq[String] = {
     import scala.jdk.CollectionConverters._
     n.elements().asScala.map(_.asText()).toSeq
-  }
-
-  private def parseStage(node: JsonNode, grok: Grok): Stage = {
-    require(node.isObject, s"stage must be an object: $node")
-    if (node.has("if")) {
-      val branches = scala.collection.mutable.ArrayBuffer.empty[(String, Seq[Stage])]
-      require(node.has("then"), s"'if' stage missing its 'then' action list: $node")
-      branches += node.get("if").asText() -> parseStages(node.get("then"), grok)
-      if (node.has("else if")) {
-        import scala.jdk.CollectionConverters._
-        for (b <- node.get("else if").elements().asScala) {
-          require(b.has("if") && b.has("then"),
-            s"'else if' branch needs 'if' and 'then': $b")
-          branches += b.get("if").asText() -> parseStages(b.get("then"), grok)
-        }
-      }
-      val otherwise =
-        if (node.has("else")) parseStages(node.get("else"), grok) else Seq.empty
-      return ConditionalStage(branches.toSeq, otherwise)
-    }
-    val name = node.fieldNames().next()
-    parseAction(name, node.get(name), grok)
   }
 
   /** One action from its name + config mapping. The reference's YAML shape

@@ -22,9 +22,6 @@ import graft.grok.{Grok, GrokExtract}
   */
 object Queries {
 
-  private def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
   // ---------------------------------------------------------------
   // §2.2 C2 — filter codec (PatternCollection: negate, any/all)
   // ---------------------------------------------------------------

@@ -14,9 +14,6 @@ import graft.text.TextAnalysis
   */
 object QueriesML {
 
-  private def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
   // ---------------------------------------------------------------
   // Exact dedup (hash-groupBy)
   // ---------------------------------------------------------------

@@ -14,9 +14,6 @@ import graft.route.Router
   */
 object QueriesR2 {
 
-  private def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
   // ---------------------------------------------------------------
   // ECS envelope (`enable ecs`, stream.go:35-45 + docs/Events.md:16-45):
   // nested host.name / event.timezone / log.file.path / log.offset

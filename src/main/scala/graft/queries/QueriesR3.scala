@@ -11,9 +11,6 @@ import graft.functions.EventFns
   */
 object QueriesR3 {
 
-  private def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
   // ---------------------------------------------------------------
   // ext.Strings CEL methods compiled to Columns (cel.go:40-44) — every
   // derived value recomputed independently by the oracle. All are

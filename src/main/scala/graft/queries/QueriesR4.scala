@@ -9,9 +9,6 @@ import graft.sources.Facts
 /** Round-4 driver queries. */
 object QueriesR4 {
 
-  private def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
   // ---------------------------------------------------------------
   // Deterministic spherical k-means (semantic-dedup clustering / trained
   // IVF quantizer): k=8, two Lloyd iterations, centroids = exact

@@ -7,9 +7,6 @@ import org.apache.spark.sql.streaming.Trigger
 /** Round-6 driver queries. */
 object QueriesR6 {
 
-  private def tbl(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
   // ---------------------------------------------------------------
   // Streaming face, driver-verified (VERDICT r5 #8): the events table
   // replayed through a REAL Structured-Streaming run — multi-file

@@ -44,7 +44,7 @@ object QueriesR7 {
     * pins the inclusive tie rule and the no-preceding-match NULLs.
     */
   def qAsofJoin(spark: SparkSession, dir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$dir/events.parquet")
+    val ev = tbl(spark, dir, "events")
     val dims = ev.filter(col("event_type") === "signup")
       .select(col("user_id"), col("ts"),
         col("event_id").as("signup_id"), col("value").as("signup_value"))
@@ -76,7 +76,7 @@ object QueriesR7 {
     * single boundary pair (half-open `[start, end)`).
     */
   def qRangeJoin(spark: SparkSession, dir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$dir/events.parquet")
+    val ev = tbl(spark, dir, "events")
     val windows = ev.filter(col("event_type") === "signup")
       .select(col("user_id"), col("ts").as("w_start"),
         (col("ts") + expr("INTERVAL 6 HOURS")).as("w_end"),
@@ -111,7 +111,7 @@ object QueriesR7 {
     * session (session_window's end bound is exclusive).
     */
   def qSessionize(spark: SparkSession, dir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$dir/events.parquet")
+    val ev = tbl(spark, dir, "events")
     ev.groupBy(col("user_id"),
         session_window(col("ts"), "30 minutes").as("sw"))
       .agg(count(lit(1)).as("n_events"))
@@ -150,7 +150,7 @@ object QueriesR7 {
     * hash breaks.
     */
   def qStreamSessions(spark: SparkSession, dir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$dir/events.parquet")
+    val ev = tbl(spark, dir, "events")
       .select(col("user_id"), col("ts").cast("timestamp").as("ts"))
     val maxTs = ev.agg(max(col("ts"))).head.getTimestamp(0) // bounded: one scalar
     val cutoff = new java.sql.Timestamp(maxTs.getTime + 24L * 3600 * 1000)
@@ -196,7 +196,7 @@ object QueriesR7 {
     */
   def qCmsHeavyHitters(spark: SparkSession, dir: String): DataFrame = {
     val D = 4; val W = 1024
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = tbl(spark, dir, "documents")
     val words = docs
       .select(explode(split(coalesce(col("text"), lit("")), " ")).as("w"))
       .filter(col("w").rlike("^[a-z]+$")) // ASCII-only: byte fold == codepoint fold
@@ -255,7 +255,7 @@ object QueriesR7 {
     * registers, accuracy-checked in HyperLogLogSpec.
     */
   def qHllDistinct(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = tbl(spark, dir, "documents")
     val words = docs
       .select(explode(split(coalesce(col("text"), lit("")), " ")).as("w"))
       .filter(col("w").rlike("^[a-z]+$")) // ASCII-only: byte fold == codepoint fold

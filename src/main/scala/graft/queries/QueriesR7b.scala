@@ -23,7 +23,7 @@ object QueriesR7b {
     * (a per-level expand, still one exchange).
     */
   def qRollupMetrics(spark: SparkSession, dir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$dir/events.parquet")
+    val ev = tbl(spark, dir, "events")
     ev.withColumn("hr", expr("unix_micros(cast(ts as timestamp)) div 3600000000"))
       .rollup(col("event_type"), col("hr"))
       .agg(count(lit(1)).as("n_events"),
@@ -52,7 +52,7 @@ object QueriesR7b {
     * alignment convention is pinned against integer epoch math.
     */
   def qRateWindows(spark: SparkSession, dir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$dir/events.parquet")
+    val ev = tbl(spark, dir, "events")
     ev.select(col("event_type"), col("ts").cast("timestamp").as("ts"))
       .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"),
         col("event_type"))
@@ -85,7 +85,7 @@ object QueriesR7b {
     * accumulators only, bounded by the watermark horizon.
     */
   def qStreamWindows(spark: SparkSession, dir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$dir/events.parquet")
+    val ev = tbl(spark, dir, "events")
       .select(col("event_type"), col("ts").cast("timestamp").as("ts"))
     val maxTs = ev.agg(max(col("ts"))).head.getTimestamp(0) // bounded: one scalar
     val cutoffSec = (maxTs.getTime + 24L * 3600 * 1000) / 1000
@@ -120,7 +120,7 @@ object QueriesR7b {
     * JSON-payload extraction) is pinned cross-engine.
     */
   def qPercentileLatency(spark: SparkSession, dir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$dir/events.parquet")
+    val ev = tbl(spark, dir, "events")
       .select(col("event_type"), col("event_id"),
         get_json_object(col("props"), "$.k").cast("long").as("kv"))
       .filter(col("kv").isNotNull)
@@ -152,7 +152,7 @@ object QueriesR7b {
     * replay must agree on every flag with zero float tolerance.
     */
   def qZscoreOutliers(spark: SparkSession, dir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$dir/events.parquet")
+    val ev = tbl(spark, dir, "events")
     val counts = ev
       .withColumn("hr", expr("unix_micros(cast(ts as timestamp)) div 3600000000"))
       .groupBy("event_type", "hr").agg(count(lit(1)).as("x"))
@@ -186,7 +186,7 @@ object QueriesR7b {
     * that postings are the doc-id-ascending prefix.
     */
   def qInvertedIndex(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = tbl(spark, dir, "documents")
     val occ = docs.select(col("doc_id"),
         explode(split(coalesce(col("text"), lit("")), " ")).as("term"))
       .filter(col("term").rlike("^[a-z]+$"))
@@ -224,7 +224,7 @@ object QueriesR7b {
     * ratio from scratch in SQL — bit-identical or red.
     */
   def qPmiCollocations(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = tbl(spark, dir, "documents")
     graft.text.Collocations.pmiBigrams(docs, "text", minCount = 5, topK = 50)
       .orderBy("rank")
   }
@@ -265,7 +265,7 @@ object QueriesR7b {
     * bit-for-bit across two independent implementations.
     */
   def qBpeMerges(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = tbl(spark, dir, "documents")
     graft.text.BpeTrainer.learnMerges(docs, "text", numMerges = 8)
       .orderBy("rank")
   }

@@ -22,7 +22,7 @@ object QueriesR7c {
     * per-document, bit-for-bit.
     */
   def qBpeEncode(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = tbl(spark, dir, "documents")
     // bounded collect: 8 merge rows — the learned tokenizer IS the
     // plan state, exactly like a shipped tokenizer.json
     val merges = graft.text.BpeTrainer.learnMerges(docs, "text", numMerges = 8)
@@ -44,7 +44,7 @@ object QueriesR7c {
     * microsecond precision.
     */
   def qFunnelStages(spark: SparkSession, dir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$dir/events.parquet")
+    val ev = tbl(spark, dir, "events")
       .select(col("user_id"), col("event_type"), col("ts"))
     val v = ev.filter(col("event_type") === "view")
       .groupBy("user_id").agg(min(col("ts")).as("v_ts"))
@@ -92,7 +92,7 @@ object QueriesR7c {
     * pure integer division.
     */
   def qCohortRetention(spark: SparkSession, dir: String): DataFrame = {
-    val days = spark.read.parquet(s"$dir/events.parquet")
+    val days = tbl(spark, dir, "events")
       .select(col("user_id"),
         expr("unix_micros(cast(ts as timestamp)) div 86400000000").as("day"))
     val cohort = days.groupBy("user_id").agg(min(col("day")).as("cohort_day"))
@@ -121,7 +121,7 @@ object QueriesR7c {
     * in by equi-key. The global bounds are one scalar collect.
     */
   def qDensifyBuckets(spark: SparkSession, dir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$dir/events.parquet")
+    val ev = tbl(spark, dir, "events")
       .select(col("event_type"),
         expr("unix_micros(cast(ts as timestamp)) div 3600000000").as("hr"))
     val counts = ev.groupBy("event_type", "hr").agg(count(lit(1)).as("n"))
@@ -163,7 +163,7 @@ object QueriesR7c {
     * diverge on cross-engine (see the [[graft.sim.Sq8Codes]] contract).
     */
   def qEmbedQuantize(spark: SparkSession, dir: String): DataFrame = {
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val emb = tbl(spark, dir, "embeddings")
     val (mins, maxs) = graft.sim.Quantize.sq8Train(emb, "embedding", dim = 64)
     emb.select(col("vec_id"),
         graft.sim.Quantize.sq8(col("embedding"), mins, maxs, asString = true)
@@ -205,7 +205,7 @@ object QueriesR7c {
     * floats anywhere.
     */
   def qPcaProject(spark: SparkSession, dir: String): DataFrame = {
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val emb = tbl(spark, dir, "embeddings")
     // bounded collect: one 64×64 long lattice — model state
     val g = graft.sim.Pca.gram(emb, "embedding", dim = 64)
     val v = graft.sim.Pca.dominantDirection(g, dim = 64, iters = PcaIters)
@@ -258,7 +258,7 @@ object QueriesR7c {
     * power-iteration chain.
     */
   def qPcaResidual(spark: SparkSession, dir: String): DataFrame = {
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val emb = tbl(spark, dir, "embeddings")
     val g = graft.sim.Pca.gram(emb, "embedding", dim = 64)
     val v = graft.sim.Pca.dominantDirection(g, dim = 64, iters = PcaIters)
     emb.select(col("vec_id"),
@@ -290,7 +290,7 @@ object QueriesR7c {
     */
   def qSourceOverlap(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = tbl(spark, dir, "documents")
     val w = Window.orderBy(col("inter").desc, col("src_a"), col("src_b"))
     graft.text.TextAnalysis.sourceOverlap(docs, "source", "text")
       .withColumn("pos", row_number().over(w)).filter(col("pos") <= 40)
@@ -337,7 +337,7 @@ object QueriesR7c {
     def stage(n: Int, name: String, cond: Column) =
       struct(lit(n).as("stage"), lit(name).as("name"), count(when(cond, 1)).as("n_docs"))
     // the exchange carries the hash and two flags, not the text
-    spark.read.parquet(s"$dir/documents.parquet")
+    tbl(spark, dir, "documents")
       .select(col("doc_id"), md5(coalesce(col("text"), lit(""))).as("h"),
         (words >= 20 && words <= 2000).as("band"), (col("lang") === "en").as("en"))
       .withColumn("surv",
@@ -380,7 +380,7 @@ object QueriesR7c {
     */
   def qFuzzyMatch(spark: SparkSession, dir: String): DataFrame =
     graft.text.FuzzyMatch.fuzzyNamePairs(
-        spark.read.parquet(s"$dir/part.parquet"), "p_name", maxDist = 2)
+        tbl(spark, dir, "part"), "p_name", maxDist = 2)
       .orderBy("name_a", "name_b")
 
   val qFuzzyMatchSql: String =
@@ -456,7 +456,7 @@ object QueriesR7c {
     * independently.
     */
   def qBitextMine(spark: SparkSession, dir: String): DataFrame = {
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val emb = tbl(spark, dir, "embeddings")
     graft.sim.Ann.mutualNearest(
         emb.filter(col("label") === 0), emb.filter(col("label") === 1))
       .orderBy("a_id")
@@ -490,7 +490,7 @@ object QueriesR7c {
     */
   def qProfileHist(spark: SparkSession, dir: String): DataFrame =
     graft.stats.Stats.histogram(
-        spark.read.parquet(s"$dir/lineitem.parquet"),
+        tbl(spark, dir, "lineitem"),
         Seq("l_quantity", "l_extendedprice", "l_discount"), nbins = 16)
       .orderBy("col_name", "bucket")
 
@@ -532,8 +532,8 @@ object QueriesR7c {
     */
   def qPageRank(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val orders = spark.read.parquet(s"$dir/orders.parquet")
-    val li = spark.read.parquet(s"$dir/lineitem.parquet")
+    val orders = tbl(spark, dir, "orders")
+    val li = tbl(spark, dir, "lineitem")
     val fwd = orders.join(li, orders("o_orderkey") === li("l_orderkey"))
       .select(col("o_custkey").as("src"), (col("l_suppkey") + 1000000L).as("dst"))
       .distinct()
@@ -584,7 +584,7 @@ object QueriesR7c {
     * (`printf('%08x')`) and replays the identical hash predicate.
     */
   def qMixTemperature(spark: SparkSession, dir: String): DataFrame = {
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = tbl(spark, dir, "documents")
     // bounded collect: one row per language — corpus statistics as
     // config-sized model state
     val counts = docs.groupBy("lang").agg(count(lit(1)).as("n"))
@@ -636,7 +636,7 @@ object QueriesR7c {
     * dropped or duplicated a pair breaks the hash.
     */
   def qStreamAttrib(spark: SparkSession, dir: String): DataFrame = {
-    val ev = spark.read.parquet(s"$dir/events.parquet")
+    val ev = tbl(spark, dir, "events")
       .select(col("user_id"), col("event_type"),
         col("ts").cast("timestamp").as("ts"))
     // the completeness claim below REQUIRES event-time-ordered file
@@ -681,7 +681,7 @@ object QueriesR7c {
     * independently.
     */
   def qHllRollup(spark: SparkSession, dir: String): DataFrame = {
-    val words = spark.read.parquet(s"$dir/documents.parquet")
+    val words = tbl(spark, dir, "documents")
       .select(col("source"),
         explode(split(coalesce(col("text"), lit("")), " ")).as("w"))
       .filter(col("w").rlike("^[a-z]+$")) // ASCII-only: byte fold == codepoint fold
@@ -751,7 +751,7 @@ object QueriesR7c {
     * independently.
     */
   def qHardNegatives(spark: SparkSession, dir: String): DataFrame = {
-    val emb = spark.read.parquet(s"$dir/embeddings.parquet")
+    val emb = tbl(spark, dir, "embeddings")
     val centRows = emb.orderBy("vec_id").limit(16)
       .select(col("vec_id").cast("long"),
         col("embedding").cast("array<double>"))

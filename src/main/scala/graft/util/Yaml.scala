@@ -1,356 +1,93 @@
 package graft.util
 
-/** Minimal block-style YAML parser covering the subset the reference's
-  * configs actually use (`lc-lib/config/parser.go` feeds YAML through
-  * go-yaml into plain maps/lists; every shipped config is block style —
-  * `testing/log-carver.yaml`, `testing/log-courier-include*.yaml`), plus
-  * the public uap-core `regexes.yaml` shape. Produces JAVA collections
-  * (`LinkedHashMap`/`ArrayList`/`String`/`Long`/`Double`/`Boolean`/null)
-  * so callers can hand the result straight to Jackson
-  * (`mapper.valueToTree`) and reuse their JSON paths unchanged.
+import org.yaml.snakeyaml.LoaderOptions
+import org.yaml.snakeyaml.error.{MarkedYAMLException, YAMLException}
+import org.yaml.snakeyaml.events._
+
+/** YAML reader for the reference's configs (`lc-lib/config/parser.go`
+  * feeds YAML through go-yaml into plain maps/lists; every shipped config
+  * is block style — `testing/log-carver.yaml`,
+  * `testing/log-courier-include*.yaml`) and the uap-core `regexes.yaml`.
+  * One pass over SnakeYAML's event stream (the jar Spark already ships)
+  * builds JAVA collections (`LinkedHashMap`/`ArrayList`/`String`/`Long`/
+  * `Double`/`Boolean`/null), so callers can hand the result straight to
+  * Jackson (`mapper.valueToTree`) and reuse their JSON paths unchanged.
   *
-  * Supported: nested block mappings and sequences (including sequences
-  * indented at their parent key's column, and compact `- key: value`
-  * mapping-in-sequence items), plain/single-/double-quoted scalars, flow
-  * `[..]`/`{..}` collections, literal `|` and folded `>` block scalars
-  * with `-`/`+` chomping, comments, and the core scalar types
-  * (true/false/null/~, integers, floats). NOT a general YAML parser:
-  * anchors/aliases, tags, multi-document streams and complex keys are
-  * rejected loudly rather than misparsed.
+  * Plain scalars are typed by [[plainScalar]] (no `yes`/`no`, octal, hex
+  * or `_` separators; an integer past `Long` stays a string); quoted and
+  * block scalars are always strings; keys are the scalar's text. Anchors, aliases, explicit tags, duplicate
+  * keys, non-scalar keys and a second document are rejected loudly, as is
+  * every scanner/parser error: each raises `IllegalArgumentException`
+  * with a line number. SnakeYAML's default `LoaderOptions` limits apply,
+  * among them the cap of 3 M code points per document.
   */
 object Yaml {
 
   def parse(text: String): Any = {
-    val rawLines = text.split("\n", -1)
-    val lines = preprocess(rawLines)
-    if (lines.isEmpty) return null
-    val p = new Parser(lines, rawLines)
-    val v = p.parseNode(0, lines.head.indent)
-    require(p.pos >= lines.length,
-      s"trailing content at line ${lines(p.pos).number}: '${lines(p.pos).content}'")
-    v
-  }
+    val events = new org.yaml.snakeyaml.Yaml(new LoaderOptions)
+      .parse(new java.io.StringReader(text)).iterator()
+    def next(): Event = events.next()
+    def fail(e: Event, what: String): Nothing = throw new IllegalArgumentException(
+      s"unsupported YAML: $what at line ${e.getStartMark.getLine + 1}")
 
-  private final case class Line(indent: Int, content: String, number: Int)
-
-  /** Strip comments (quote-aware) and blank lines; reject tab indents.
-    * Block-scalar bodies are re-read verbatim from the raw lines later —
-    * the structural pass only needs comment-free non-blank lines.
-    */
-  private def preprocess(rawLines: Array[String]): Vector[Line] = {
-    val out = Vector.newBuilder[Line]
-    var n = 0
-    for (raw <- rawLines) {
-      n += 1
-      require(!raw.takeWhile(c => c == ' ' || c == '\t').contains('\t'),
-        s"tab indentation at line $n (YAML forbids tabs in indentation)")
-      val noComment = stripComment(raw)
-      val indent = noComment.takeWhile(_ == ' ').length
-      val content = noComment.trim
-      if (content.nonEmpty) out += Line(indent, content, n)
-    }
-    out.result()
-  }
-
-  /** Remove a ` # comment` outside quotes (or a whole-line comment). */
-  private def stripComment(s: String): String = {
-    var i = 0; var q: Char = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (q == 0 && c == '#' && (i == 0 || s.charAt(i - 1) == ' ' || s.charAt(i - 1) == '\t'))
-        return s.substring(0, i)
-      if (q == 0 && (c == '\'' || c == '"')) q = c
-      else if (q == '\'' && c == '\'') q = 0 // '' escape handled by scalar lexer
-      else if (q == '"' && c == '"' && (i == 0 || s.charAt(i - 1) != '\\')) q = 0
-      i += 1
-    }
-    s
-  }
-
-  private final class Parser(lines: Vector[Line], rawLines: Array[String]) {
-    var pos = 0
-
-    private def cur: Line = lines(pos)
-    private def atEnd: Boolean = pos >= lines.length
-
-    /** Parse the node starting at the current line, owning indent >= min. */
-    def parseNode(min: Int, nodeIndent: Int): Any = {
-      require(!atEnd, "unexpected end of input")
-      val l = cur
-      if (l.content == "-" || l.content.startsWith("- ")) parseSeq(nodeIndent)
-      else parseMap(nodeIndent)
+    def vet(e: Event): Event = e match {
+      case _: AliasEvent => fail(e, "alias")
+      case n: NodeEvent if n.getAnchor != null => fail(e, s"anchor &${n.getAnchor}")
+      case s: ScalarEvent if s.getTag != null => fail(e, s"tag ${s.getTag}")
+      case c: CollectionStartEvent if c.getTag != null => fail(e, s"tag ${c.getTag}")
+      case _ => e
     }
 
-    private def isDash(content: String): Boolean =
-      content == "-" || content.startsWith("- ")
-
-    private def parseSeq(indent: Int): java.util.ArrayList[Any] = {
-      val out = new java.util.ArrayList[Any]()
-      while (!atEnd && cur.indent == indent && isDash(cur.content))
-        out.add(parseSeqItem(indent))
-      out
-    }
-
-    /** One sequence item, cursor ON its dash line. */
-    private def parseSeqItem(indent: Int): Any = {
-      val l = cur
-      if (l.content == "-") {
-        pos += 1
-        if (!atEnd && cur.indent > indent) parseNode(indent + 1, cur.indent)
-        else null
-      } else parseInlineItem(l.content.substring(2), indent + 2, l.number)
-    }
-
-    /** A sequence item whose content begins on the dash line: a nested
-      * sequence (`- - x` compact form), the first `key: value` of a
-      * compact mapping (continuation keys at the dash column + 2), or a
-      * scalar/block-scalar.
-      */
-    private def parseInlineItem(first: String, itemIndent: Int, lineNo: Int): Any =
-      if (isDash(first)) {
-        // nested sequence starting on the same line: first item from the
-        // remainder, subsequent items at the inner dash column
+    def node(e: Event): Any = vet(e) match {
+      case s: ScalarEvent => if (s.isPlain) plainScalar(s.getValue) else s.getValue
+      case _: SequenceStartEvent =>
         val out = new java.util.ArrayList[Any]()
-        if (first == "-") {
-          pos += 1
-          if (!atEnd && cur.indent > itemIndent) out.add(parseNode(itemIndent + 1, cur.indent))
-          else out.add(null)
-        } else out.add(parseInlineItem(first.substring(2), itemIndent + 2, lineNo))
-        while (!atEnd && cur.indent == itemIndent && isDash(cur.content))
-          out.add(parseSeqItem(itemIndent))
+        var item = next()
+        while (!item.isInstanceOf[SequenceEndEvent]) { out.add(node(item)); item = next() }
         out
-      } else splitKey(first) match {
-        case Some((k, rest)) =>
-          // compact mapping: the dash line carries the first entry and
-          // continuation keys sit at the dash column + 2
-          parseMapFrom(k, rest, itemIndent, lineNo)
-        case None =>
-          pos += 1
-          parseScalarOrBlock(first, itemIndent, lineNo)
-      }
-
-    private def parseMap(indent: Int): java.util.LinkedHashMap[String, Any] = {
-      val l = cur
-      splitKey(l.content) match {
-        case Some((k, rest)) => parseMapFrom(k, rest, indent, l.number)
-        case None => throw new IllegalArgumentException(
-          s"expected 'key: value' at line ${l.number}: '${l.content}'")
-      }
-    }
-
-    private def parseMapFrom(firstKey: String, firstRest: String, indent: Int,
-        lineNo: Int): java.util.LinkedHashMap[String, Any] = {
-      val out = new java.util.LinkedHashMap[String, Any]()
-      var k = firstKey; var rest = firstRest; var no = lineNo
-      var continue = true
-      while (continue) {
-        pos += 1
-        val v =
-          if (rest.nonEmpty) parseScalarOrBlock(rest, indent + 1, no)
-          else if (!atEnd && cur.indent > indent) parseNode(indent + 1, cur.indent)
-          else if (!atEnd && cur.indent == indent &&
-              (cur.content == "-" || cur.content.startsWith("- ")))
-            // YAML allows a sequence value at its parent key's column
-            parseSeq(indent)
-          else null
-        require(!out.containsKey(k), s"duplicate key '$k' at line $no")
-        out.put(k, v)
-        if (!atEnd && cur.indent == indent && !cur.content.startsWith("- ")
-            && cur.content != "-") {
-          splitKey(cur.content) match {
-            case Some((k2, r2)) => k = k2; rest = r2; no = cur.number
-            case None => throw new IllegalArgumentException(
-              s"expected 'key: value' at line ${cur.number}: '${cur.content}'")
-          }
-        } else continue = false
-      }
-      out
-    }
-
-    /** Value text on the same line as its key/dash: block-scalar header,
-      * flow collection, or plain/quoted scalar.
-      */
-    private def parseScalarOrBlock(text: String, minBody: Int, lineNo: Int): Any = {
-      val t = text.trim
-      if (t.startsWith("|") || t.startsWith(">")) parseBlockScalar(t, minBody, lineNo)
-      else scalar(t, lineNo)
-    }
-
-    /** Literal/folded block scalar: body = following raw lines indented
-      * at least `minBody` (strictly deeper than the owning key — a first
-      * non-blank line at or left of the key is NOT body, it is the next
-      * sibling/parent entry and the scalar is empty; without the bound an
-      * empty `key: >-` silently swallowed following keys into the
-      * scalar). Indentation indicators are not supported.
-      */
-    private def parseBlockScalar(header: String, minBody: Int,
-        headerLineNo: Int): String = {
-      val folded = header.charAt(0) == '>'
-      val chomp = if (header.length > 1) header.charAt(1) else ' '
-      require(header.replaceAll("[|>+-]", "").trim.isEmpty,
-        s"unsupported block scalar header '$header' at line $headerLineNo")
-      // body lines come from the RAW text (comments are content here)
-      val body = scala.collection.mutable.ArrayBuffer.empty[String]
-      var rawIdx = headerLineNo // rawLines is 0-based; header is line headerLineNo
-      var bodyIndent = -1
-      var lastNonBlank = -1
-      var scanning = true
-      while (scanning && rawIdx < rawLines.length) {
-        val raw = rawLines(rawIdx)
-        val ind = raw.takeWhile(_ == ' ').length
-        val blank = raw.trim.isEmpty
-        if (blank) { body += ""; rawIdx += 1 }
-        else if (bodyIndent == -1) {
-          if (ind < minBody) scanning = false // empty scalar: next entry, not body
-          else {
-            bodyIndent = ind; body += raw.substring(ind)
-            lastNonBlank = body.length - 1; rawIdx += 1
-          }
-        } else if (ind >= bodyIndent) {
-          body += raw.substring(bodyIndent); lastNonBlank = body.length - 1; rawIdx += 1
-        } else scanning = false
-      }
-      // advance the structural cursor past consumed body lines
-      while (!atEnd && cur.number <= rawIdx) pos += 1
-      val kept = body.take(lastNonBlank + 1)
-      val joined =
-        if (!folded) kept.mkString("\n")
-        else kept.foldLeft(new StringBuilder) { (sb, line) =>
-          if (sb.isEmpty) sb.append(line)
-          else if (line.isEmpty) sb.append('\n')
-          else if (sb.nonEmpty && sb.charAt(sb.length - 1) == '\n') sb.append(line)
-          else sb.append(' ').append(line)
-        }.toString
-      chomp match {
-        case '-' => joined
-        case '+' => joined + "\n" // (trailing blanks beyond one not preserved)
-        case _ => if (kept.isEmpty) "" else joined + "\n"
-      }
-    }
-
-    /** Split `key: rest` / `key:` — key may be single- or double-quoted;
-      * a plain key ends at the first `: ` or a trailing `:`. Returns None
-      * when the line is not a mapping entry (plain scalars may contain
-      * colons, e.g. `tcp:127.0.0.1:1234`).
-      */
-    private def splitKey(s: String): Option[(String, String)] = {
-      if (s.startsWith("'") || s.startsWith("\"")) {
-        val q = s.charAt(0)
-        var i = 1
-        while (i < s.length) {
-          if (q == '\'' && s.charAt(i) == '\'' &&
-              i + 1 < s.length && s.charAt(i + 1) == '\'') i += 2
-          else if (s.charAt(i) == q && !(q == '"' && s.charAt(i - 1) == '\\')) {
-            val key = unquote(s.substring(0, i + 1))
-            val after = s.substring(i + 1).trim
-            if (after == ":") return Some((key, ""))
-            if (after.startsWith(": ")) return Some((key, after.substring(2).trim))
-            return None
-          } else i += 1
-        }
-        None
-      } else {
-        // plain key: scan for ': ' or line-final ':'; a colon NOT followed
-        // by space is part of the scalar (ipv6, urls, `tcp:host:port`)
-        var i = 0
-        while (i < s.length) {
-          if (s.charAt(i) == ':' && (i + 1 == s.length || s.charAt(i + 1) == ' ')) {
-            val key = s.substring(0, i).trim
-            if (key.isEmpty) return None
-            return Some((key, s.substring(math.min(i + 2, s.length)).trim))
-          }
-          i += 1
-        }
-        None
-      }
-    }
-
-    private def scalar(t: String, lineNo: Int): Any = {
-      require(!t.startsWith("&") && !t.startsWith("*") && !t.startsWith("!"),
-        s"unsupported YAML feature (anchor/alias/tag) at line $lineNo: '$t'")
-      if (t.startsWith("[") || t.startsWith("{")) flow(t, lineNo)
-      else if (t.startsWith("'") || t.startsWith("\"")) unquote(t)
-      else plainScalar(t)
-    }
-
-    private def flow(t: String, lineNo: Int): Any = {
-      require((t.startsWith("[") && t.endsWith("]")) ||
-              (t.startsWith("{") && t.endsWith("}")),
-        s"flow collection must close on the same line (line $lineNo): '$t'")
-      val inner = t.substring(1, t.length - 1).trim
-      val items = splitFlow(inner)
-      if (t.startsWith("[")) {
-        val out = new java.util.ArrayList[Any]()
-        items.foreach(it => out.add(scalar(it, lineNo)))
-        out
-      } else {
+      case _: MappingStartEvent =>
         val out = new java.util.LinkedHashMap[String, Any]()
-        items.foreach { it =>
-          splitKey(it) match {
-            case Some((k, v)) => out.put(k, scalar(v, lineNo))
-            case None => throw new IllegalArgumentException(
-              s"bad flow map entry '$it' at line $lineNo")
+        var key = next()
+        while (!key.isInstanceOf[MappingEndEvent]) {
+          val k = vet(key) match {
+            case s: ScalarEvent => s.getValue
+            case _ => fail(key, "non-scalar key")
           }
+          if (out.containsKey(k)) fail(key, s"duplicate key '$k'")
+          out.put(k, node(next()))
+          key = next()
         }
         out
-      }
+      case other => fail(other, s"unexpected ${other.getEventId}")
     }
 
-    /** Split a flow body on top-level commas (quote- and bracket-aware). */
-    private def splitFlow(s: String): Seq[String] = {
-      if (s.isEmpty) return Seq.empty
-      val out = Seq.newBuilder[String]
-      var depth = 0; var q: Char = 0; var start = 0; var i = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (q != 0) {
-          if (q == '\'' && c == '\'' && i + 1 < s.length && s.charAt(i + 1) == '\'') i += 1
-          else if (c == q && !(q == '"' && s.charAt(i - 1) == '\\')) q = 0
-        }
-        else if (c == '\'' || c == '"') q = c
-        else if (c == '[' || c == '{') depth += 1
-        else if (c == ']' || c == '}') depth -= 1
-        else if (c == ',' && depth == 0) { out += s.substring(start, i).trim; start = i + 1 }
-        i += 1
+    try {
+      next() // StreamStart
+      next() match {
+        case _: StreamEndEvent => null
+        case _ =>
+          val root = node(next())
+          next() // DocumentEnd
+          next() match {
+            case _: StreamEndEvent => root
+            case e => fail(e, "a second document")
+          }
       }
-      out += s.substring(start).trim
-      out.result()
+    } catch {
+      case e: MarkedYAMLException =>
+        val mark = Option(e.getProblemMark).orElse(Option(e.getContextMark))
+        throw new IllegalArgumentException(
+          s"YAML error at line ${mark.map(_.getLine + 1).getOrElse(0)}: ${e.getMessage}", e)
+      case e: YAMLException => throw new IllegalArgumentException(s"YAML error: ${e.getMessage}", e)
     }
   }
-
-  private def unquote(t: String): String =
-    if (t.startsWith("'"))
-      t.substring(1, t.length - 1).replace("''", "'")
-    else {
-      val body = t.substring(1, t.length - 1)
-      val sb = new StringBuilder
-      var i = 0
-      while (i < body.length) {
-        val c = body.charAt(i)
-        if (c == '\\' && i + 1 < body.length) {
-          body.charAt(i + 1) match {
-            case 'n' => sb.append('\n'); i += 2
-            case 't' => sb.append('\t'); i += 2
-            case 'r' => sb.append('\r'); i += 2
-            case '0' => sb.append(' '); i += 2
-            case '\\' => sb.append('\\'); i += 2
-            case '"' => sb.append('"'); i += 2
-            case '/' => sb.append('/'); i += 2
-            case 'u' =>
-              sb.append(Integer.parseInt(body.substring(i + 2, i + 6), 16).toChar)
-              i += 6
-            case other => sb.append('\\').append(other); i += 2
-          }
-        } else { sb.append(c); i += 1 }
-      }
-      sb.toString
-    }
 
   private val IntRe = "^[+-]?\\d+$".r
   private val FloatRe = "^[+-]?(\\d+\\.\\d*|\\.\\d+|\\d+)([eE][+-]?\\d+)?$".r
 
+  /** Type a plain scalar; the empty plain scalar is an absent value. */
   private def plainScalar(t: String): Any = t match {
-    case "null" | "~" | "Null" | "NULL" => null
+    case "" | "null" | "~" | "Null" | "NULL" => null
     case "true" | "True" | "TRUE" => java.lang.Boolean.TRUE
     case "false" | "False" | "FALSE" => java.lang.Boolean.FALSE
     case IntRe() =>

@@ -198,6 +198,48 @@ class PipelineConfigSpec extends SparkTestBase {
       "- else if: \"true\"\n  then:\n  - name: add_tag\n    tag: t\n"))
   }
 
+  test("a JSON-dialect conditional keeps its else-if and else through every entry point") {
+    // the scaladoc's JSON-dialect conditional — `if`, an `else if` list,
+    // `else` — spelled in JSON and in YAML
+    val json =
+      """[{"if": "event.text.matches(\"^\\\\d\")",
+        |  "then": [{"add_tag": {"tag": "nginx"}}],
+        |  "else if": [{"if": "event.text.matches(\"^[a-z]+=\")",
+        |               "then": [{"kv": {"field": "text"}}]}],
+        |  "else": [{"add_tag": {"tag": "plain"}}]}]""".stripMargin
+    val yaml =
+      """- if: event.text.matches("^\\d")
+        |  then:
+        |  - add_tag: {tag: nginx}
+        |  else if:
+        |  - if: event.text.matches("^[a-z]+=")
+        |    then:
+        |    - kv: {field: text}
+        |  else:
+        |  - add_tag: {tag: plain}
+        |""".stripMargin
+    val dir = java.nio.file.Files.createTempDirectory("graft-entry-points")
+    def document(name: String, text: String): java.nio.file.Path =
+      java.nio.file.Files.writeString(dir.resolve(name), text)
+    val entryPoints = Seq[(String, () => Seq[Stage])](
+      "fromJson" -> (() => PipelineConfig.fromJson(json)),
+      "fromYaml" -> (() => PipelineConfig.fromYaml(yaml)),
+      "loadDocument .json" -> (() => PipelineConfig.loadDocument(
+        document("pipeline.json", s"""{"pipelines": $json}""")).stages),
+      "loadDocument .yaml" -> (() => PipelineConfig.loadDocument(
+        document("pipeline.yaml", "pipelines:\n" + yaml)).stages))
+    for ((entry, read) <- entryPoints) {
+      val parsed = read()
+      assert(parsed.length == 1, entry)
+      val cond = parsed.head.asInstanceOf[ConditionalStage]
+      assert(cond.branches.length == 2, entry)
+      assert(cond.branches.map(_._1) == Seq("event.text.matches(\"^\\\\d\")",
+        "event.text.matches(\"^[a-z]+=\")"), entry)
+      assert(cond.otherwiseStages.nonEmpty, entry)
+    }
+    graft.util.Fs.deleteRecursively(dir)
+  }
+
   test("user_agent action loads a full uap-core database file") {
     val dbFile = java.nio.file.Files.createTempFile("uap-regexes", ".yaml")
     java.nio.file.Files.writeString(dbFile,

@@ -199,4 +199,32 @@ class YamlSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](Yaml.parse("\ta: tab indent"))
     intercept[IllegalArgumentException](Yaml.parse("a: v\na: dup"))
   }
+
+  test("NUL escape, keep-chomp blanks, multi-line flow, non-scalar keys; plain typing") {
+    val doc = asMap(Yaml.parse(
+      """nul: "a\0b"
+        |keep: |+
+        |  body
+        |
+        |
+        |flow: [1,
+        |  2, x]
+        |octal: 0755
+        |hex: 0x1F
+        |underscored: 1_000
+        |word: yes
+        |big: 9223372036854775808
+        |""".stripMargin))
+    assert(doc.get("nul") == s"a${0.toChar}b")
+    assert(doc.get("keep") == "body\n\n\n") // every trailing blank line kept
+    val flow = asList(doc.get("flow")) // a flow list may span lines
+    assert(flow.size == 3 && flow.get(1) == java.lang.Long.valueOf(2) && flow.get(2) == "x")
+    assert(doc.get("octal") == java.lang.Long.valueOf(755))
+    assert(doc.get("hex") == "0x1F")
+    assert(doc.get("underscored") == "1_000")
+    assert(doc.get("word") == "yes")
+    assert(doc.get("big") == "9223372036854775808")
+    intercept[IllegalArgumentException](Yaml.parse("[a, b]: c\n"))
+    intercept[IllegalArgumentException](Yaml.parse("? {k: v}\n: c\n"))
+  }
 }

@@ -62,11 +62,12 @@ object Bench {
     // v2 committer: task-side renames, cutting the driver-side serial
     // commit that is pure fixed cost and biases the N->4N ratio
     "spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version" -> "2",
-    // lz4 sink codec: measured 10-20% faster than snappy on this
-    // write-heavy pipeline (16.3 s vs 18.0-20.6 s at local[8], with the
-    // PerfProbe main last held in commit b7b492f); compression stays on —
-    // raw parquet would shift cost to the page cache and misrepresent a
-    // real cluster's network/disk
+    // lz4 session codec: it covers only the input and warm-up copies
+    // below. The timed Router.write carries the engine's sink encoding
+    // (NoForkLocalFileSystem.SinkWriteOptions, zstd), and a writer option
+    // wins over the session codec. lz4 was measured 10-20% faster than
+    // snappy when it was still the sink codec (16.3 s vs 18.0-20.6 s at
+    // local[8], with the PerfProbe main last held in commit b7b492f)
     "spark.sql.parquet.compression.codec" -> "lz4",
     // split sizing for THIS input scale (the "size maxPartitionBytes to
     // the data" rule): the 8M-turn input is 32×8 MB files, and default

@@ -31,8 +31,9 @@ object RunPipeline {
 
   final case class BatchResult(report: Metrics.Report, committed: Int, bucketsTotal: Int)
 
-  /** [[main]]'s own session conf on top of [[Sessions.conf]]; Spark's
-    * default parquet codec stays, so the sink bytes do too.
+  /** [[main]]'s own session conf on top of [[Sessions.conf]]. It sets
+    * no parquet codec: the commit's write carries the engine's sink
+    * encoding ([[graft.util.NoForkLocalFileSystem.SinkWriteOptions]]).
     */
   private[graft] val SessionConf = Seq(
     "spark.app.name" -> "graft-pipeline",
@@ -88,9 +89,9 @@ object RunPipeline {
       case None => TranscriptPipeline.stages
     }
 
-    val turns = spark.read.parquet(inputDir)
-    val assigned = TranscriptPipeline.run(spark, turns, parseStages)
-    val committed = Lineage.run(Router.stripMeta(assigned), outputRoot, nBuckets, batchId)
+    // the commit buckets the raw turns and parses only unsealed buckets
+    val committed = Lineage.run(spark.read.parquet(inputDir), outputRoot, nBuckets, batchId,
+      transform = turns => Router.stripMeta(TranscriptPipeline.run(spark, turns, parseStages)))
 
     val report = Metrics.fromSinks(committedSinks(spark, outputRoot),
       (System.nanoTime() - t0) / 1e9)

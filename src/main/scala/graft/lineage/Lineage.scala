@@ -17,10 +17,14 @@ import org.apache.spark.sql.functions._
   * The reference persists per-file resume offsets with an atomic
   * write-to-`.new`-then-rename (`lc-lib/registrar/registrar.go:94-199`)
   * and only advances offsets when the whole downstream chain has acked
-  * (`event_ack.go:37-66`). The batch-engine equivalent: the input is
-  * bucketed by `pmod(hash(conv_id), nBuckets)`; each bucket's output is
-  * written to a staging directory in ONE partitioned pass, then per bucket
-  * moved into place and sealed with an atomically-renamed lineage marker.
+  * (`event_ack.go:37-66`). The batch-engine equivalent: the raw input is
+  * bucketed by `pmod(hash(conv_id), nBuckets)` before the caller's
+  * transform (parse → enrich → route) runs, sealed buckets are dropped
+  * there, and the rest are repartitioned by bucket, so the exchange
+  * carries only the input's columns and every write task holds whole
+  * buckets. The transformed rows are written to a staging directory in
+  * ONE partitioned pass, one file per bucket, then per bucket moved into
+  * place and sealed with an atomically-renamed lineage marker.
   * A resumed run skips every bucket whose marker exists and re-does the
   * rest — re-writing a bucket is idempotent (full overwrite before the
   * marker appears), so crash at ANY point yields exactly-once output.
@@ -36,7 +40,8 @@ import org.apache.spark.sql.functions._
   *
   * The registrar persists in-process, where Go's chmod is a plain
   * syscall; so does the staged write here. It carries
-  * [[graft.util.NoForkLocalFileSystem.WriteOptions]], so a `file:` root
+  * [[graft.util.NoForkLocalFileSystem.SinkWriteOptions]] (the engine's
+  * one sink encoding on top of the no-fork options), so a `file:` root
   * is written through [[graft.util.NoForkLocalFileSystem]] instead of a
   * forked `chmod` per file and directory (~780 per 64-bucket batch). The
   * options are scoped to the write, not the session, because Hadoop's
@@ -149,16 +154,32 @@ object Lineage {
   private def deleteRecursively(p: Path): Unit =
     graft.util.Fs.deleteRecursively(p)
 
-  /** Process `df` into `root` exactly once, resumable.
+  /** Process `input` through `transform` into `root` exactly once,
+    * resumable.
+    *
+    * `_bucket` is computed on `keyCol` of `input`, buckets already sealed
+    * under `root` are dropped, and the rest are repartitioned by
+    * `_bucket` before `transform` runs: a resumed run transforms only the
+    * rows of unsealed buckets, and each bucket is written by one task as
+    * one file. Bucket `b` goes to task `b mod t`, with `t` the shuffle
+    * partitions capped at `nBuckets`, so every task holds the same number
+    * of buckets, give or take one. Not a hash repartition: murmur3 of 64
+    * bucket ids over 4 partitions puts 21, 16, 16 and 11 buckets in the
+    * four tasks, and the largest sets the batch's time. Not a
+    * `rebalance` either: it may split a skewed bucket over several tasks
+    * and so several files. `transform` must keep `_bucket` and add no
+    * shuffle, so that each row stays in its bucket's task; the written
+    * schema is its output without `_bucket`.
     *
     * @param maxBucketsToCommit test hook: stop committing after N buckets
     *        to simulate a crash mid-run (remaining staging data is
     *        discarded, like an unflushed registrar write).
     * @return number of buckets committed in THIS run.
     */
-  def run(df: DataFrame, root: String, nBuckets: Int, batchId: String,
+  def run(input: DataFrame, root: String, nBuckets: Int, batchId: String,
       keyCol: String = "conv_id",
-      maxBucketsToCommit: Int = Int.MaxValue): Int = {
+      maxBucketsToCommit: Int = Int.MaxValue,
+      transform: DataFrame => DataFrame = identity): Int = {
     requireSafeBatchId(batchId)
     // a bucket is pmod(hash(key), nBuckets): resuming under another
     // count would skip and rewrite buckets of a different key mapping
@@ -167,8 +188,12 @@ object Lineage {
     require(sealedUnder.isEmpty, s"$root was sealed with nBuckets=" +
       s"${sealedUnder.mkString(",")}; a resume must use the same count, got $nBuckets")
     val done = markers.map(_.partitionId).toSet
-    val bucketed = df.withColumn(BucketCol, pmod(hash(col(keyCol)), lit(nBuckets)))
-    val todo = bucketed.filter(!col(BucketCol).isin(done.toSeq: _*))
+    val tasks = math.min(nBuckets, input.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
+    val todo = transform(input
+      .withColumn(BucketCol, pmod(hash(col(keyCol)), lit(nBuckets)))
+      .filter(!col(BucketCol).isin(done.toSeq: _*))
+      .repartitionById(tasks, pmod(col(BucketCol), lit(tasks))))
+    require(todo.columns.contains(BucketCol), s"the transform dropped $BucketCol")
 
     val staging = Paths.get(root, s"_staging_$batchId")
     deleteRecursively(staging)
@@ -177,13 +202,13 @@ object Lineage {
     // task's successful attempt merges its update, and the observation
     // sits in the write's result stage, which runs each partition once.
     // Bytes are 0 for a null text and for a frame with no text column.
-    val hasSink = df.columns.contains(graft.route.Router.SinkCol)
+    val hasSink = todo.columns.contains(graft.route.Router.SinkCol)
     val obs = Observation()
     todo.observe(obs, BucketSinkTally(col(BucketCol),
         if (hasSink) col(graft.route.Router.SinkCol) else lit(null).cast("string"),
-        if (df.columns.contains("text")) coalesce(octet_length(col("text")), lit(0))
+        if (todo.columns.contains("text")) coalesce(octet_length(col("text")), lit(0))
         else lit(0)).as("tally"))
-      .write.options(graft.util.NoForkLocalFileSystem.WriteOptions)
+      .write.options(graft.util.NoForkLocalFileSystem.SinkWriteOptions)
       .mode("overwrite").partitionBy(BucketCol).parquet(staging.toString)
     // no fallback scan: a tally that never arrives fails the run before
     // any bucket is sealed, and a re-run redoes the staging

@@ -214,6 +214,7 @@ object PipelineConfig {
       } else if (e.has("name")) {
         out += parseAction(e.get("name").asText(), e, grok)
       } else {
+        require(e.size() > 0, "empty pipeline entry: an action needs a name")
         val name = e.fieldNames().next()
         out += parseAction(name, e.get(name), grok)
       }
@@ -235,6 +236,11 @@ object PipelineConfig {
     def str(f: String, default: String = null): String =
       if (cfg.has(f)) cfg.get(f).asText() else default
     def bool(f: String): Boolean = cfg.has(f) && cfg.get(f).asBoolean()
+    def required(f: String): JsonNode = {
+      val n = cfg.get(f)
+      require(n != null && !n.isNull, s"$name action missing required '$f': $cfg")
+      n
+    }
     name match {
       case "grok" =>
         val localPatterns =
@@ -243,16 +249,16 @@ object PipelineConfig {
             cfg.get("local patterns").properties().asScala
               .map(e => e.getKey -> e.getValue.asText()).toMap
           } else Map.empty[String, String]
-        GrokStage(str("field"), strings(cfg.get("patterns")), bool("remove"),
+        GrokStage(str("field"), strings(required("patterns")), bool("remove"),
           localPatterns, grok)
-      case "date" => DateStage(str("field"), strings(cfg.get("formats")), bool("remove"))
+      case "date" => DateStage(str("field"), strings(required("formats")), bool("remove"))
       case "json" => JsonStage(str("field"), bool("remove"))
       case "kv" => KvStage(str("field"), str("prefix", ""))
       case "set_field" => SetFieldStage(str("field"), str("value"))
       case "unset_field" => UnsetFieldStage(str("field"))
-      case "add_tag" => AddTagStage(str("tag"))
-      case "remove_tag" => RemoveTagStage(str("tag"))
-      case "filter" => FilterStage(strings(cfg.get("patterns")),
+      case "add_tag" => AddTagStage(required("tag").asText())
+      case "remove_tag" => RemoveTagStage(required("tag").asText())
+      case "filter" => FilterStage(strings(required("patterns")),
         str("match", "any"), str("field", "text"))
       case "user_agent" =>
         // optional `database`: a uap-core regexes.yaml/JSON file (the

@@ -55,7 +55,7 @@ object QueriesR6 {
     StreamingPipeline.commit(source, s"$base/ckpt", s"$base/out", nBuckets = 4,
         keyCol = "event_id", Trigger.AvailableNow()) { batch =>
       graft.pipeline.Pipeline(batch, stages)
-        .select(col("event_id"),
+        .select(col("event_id"), col(graft.lineage.Lineage.BucketCol),
           element_at(col(graft.model.Envelope.FieldsCol), "event_type")
             .as("event_type"),
           array_join(col(graft.model.Envelope.TagsCol), ",").as("tag"),

@@ -56,11 +56,14 @@ object Router {
     * conf, because Hadoop's `FileSystem` cache is keyed by scheme,
     * authority and user, not by conf, so a session-wide `fs.file.impl`
     * is silently ignored once anything in the JVM has obtained a `file:`
-    * filesystem. Other schemes are untouched.
+    * filesystem. Other schemes are untouched. The parquet write carries
+    * them inside [[NoForkLocalFileSystem.SinkWriteOptions]], the engine's
+    * one sink encoding (zstd, no dictionary on `text`, `ts`, `event_ts`),
+    * which wins over the session's parquet codec.
     */
   def write(assigned: DataFrame, outDir: String): Unit = {
     stripMeta(assigned)
-      .write.options(NoForkLocalFileSystem.WriteOptions).mode("overwrite")
+      .write.options(NoForkLocalFileSystem.SinkWriteOptions).mode("overwrite")
       .partitionBy(SinkCol)
       .parquet(outDir)
     installTemplate(stripMeta(assigned), outDir)
@@ -162,7 +165,7 @@ object Router {
     * (`tablemanager.go:131-215`): one write pass materialising every
     * per-event table (directory) with day partitions inside, retention
     * applied up front. Layout: `outDir/_table=<name>/_day=<yyyy-MM-dd>/`.
-    * Carries [[NoForkLocalFileSystem.WriteOptions]] like [[write]].
+    * Carries [[NoForkLocalFileSystem.SinkWriteOptions]] like [[write]].
     */
   def writeDorisTables(df: DataFrame, tablePattern: String, tsCol: Column,
       retentionDays: Int, now: Column, outDir: String): Unit =
@@ -170,7 +173,7 @@ object Router {
       .filter(retentionFilter(tsCol, retentionDays, now))
       .withColumn("_table", dorisTableColumn(df, tablePattern))
       .withColumn("_day", date_format(tsCol, "yyyy-MM-dd"))
-      .write.options(NoForkLocalFileSystem.WriteOptions).mode("overwrite")
+      .write.options(NoForkLocalFileSystem.SinkWriteOptions).mode("overwrite")
       .partitionBy("_table", "_day")
       .parquet(outDir)
 }

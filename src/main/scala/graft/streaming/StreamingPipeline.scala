@@ -114,12 +114,15 @@ object StreamingPipeline {
     catch { case _: Exception => () } // advisory only — never block a stream
 
   /** The one streaming sink: seal each micro-batch of `stream` exactly
-    * once. `perBatch` maps the micro-batch to its output, and
-    * [[graft.lineage.Lineage.run]] commits it, meta columns stripped,
-    * into `nBuckets` buckets of `keyCol` under `outRoot/batch=<id>` —
-    * one lineage root per micro-batch id. A batch that failed mid-commit
-    * is re-delivered with the same id and data on restart from
-    * `checkpointDir`, and re-seals only its unsealed buckets.
+    * once. [[graft.lineage.Lineage.run]] buckets the micro-batch on
+    * `keyCol` into `nBuckets` buckets, drops the buckets already sealed
+    * under `outRoot/batch=<id>` (one lineage root per micro-batch id),
+    * and commits `perBatch` of the rest, meta columns stripped. So
+    * `perBatch` is its transform: it must keep `_bucket`
+    * ([[graft.lineage.Lineage.BucketCol]]) and add no shuffle. A batch
+    * that failed mid-commit is re-delivered with the same id and data on
+    * restart from `checkpointDir`, and re-processes and re-seals only its
+    * unsealed buckets.
     */
   def commit(stream: DataFrame, checkpointDir: String, outRoot: String,
       nBuckets: Int, keyCol: String, trigger: Trigger)(
@@ -128,8 +131,8 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        Lineage.run(Router.stripMeta(perBatch(batch)), s"$outRoot/batch=$id", nBuckets,
-          batchId = id.toString, keyCol = keyCol)
+        Lineage.run(batch, s"$outRoot/batch=$id", nBuckets, batchId = id.toString,
+          keyCol = keyCol, transform = b => Router.stripMeta(perBatch(b)))
         ()
       }
       .start()

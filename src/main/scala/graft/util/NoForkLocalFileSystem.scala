@@ -48,4 +48,20 @@ object NoForkLocalFileSystem {
   val WriteOptions: Map[String, String] = Map(
     "fs.file.impl" -> classOf[NoForkLocalFileSystem].getName,
     "fs.file.impl.disable.cache" -> "true")
+
+  /** The one encoding of the engine's parquet sink writes
+    * ([[graft.lineage.Lineage.run]], [[graft.route.Router.write]] and
+    * [[graft.route.Router.writeDorisTables]]), on top of [[WriteOptions]]:
+    * zstd, and no dictionary for the envelope's near-unique columns
+    * `text`, `ts` and `event_ts`. Their dictionaries grow to nearly a
+    * value per row, so building them costs hash-table probes and rehashes
+    * and buys no compactness; zstd's window folds repeated lines within a
+    * page instead. Low-cardinality columns (`role`, `tool`, `_sink`, …)
+    * keep their dictionaries. The column paths are lowercase because
+    * Spark lowercases writer-option keys; a frame without these columns
+    * writes as usual.
+    */
+  val SinkWriteOptions: Map[String, String] = WriteOptions ++
+    Map("compression" -> "zstd") ++
+    Seq("text", "ts", "event_ts").map(c => s"parquet.enable.dictionary#$c" -> "false")
 }

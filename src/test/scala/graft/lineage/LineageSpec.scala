@@ -2,9 +2,18 @@ package graft.lineage
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkTestBase
 import graft.model.TranscriptGen
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, In, InSet}
+import org.apache.spark.sql.execution.{FilterExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Resume/exactly-once test (FIXTURES.md §5.4): kill after a partial
   * commit → rerun → final per-sink counts identical to a clean run, no
@@ -71,6 +80,54 @@ class LineageSpec extends SparkTestBase {
     Lineage.run(turns.repartition(32), rootC, nBuckets = 8, batchId = "w32")
     val c = Lineage.readData(spark, rootC).select("conv_id", "turn_idx", "text")
     assert(c.exceptAll(a).isEmpty && a.exceptAll(c).isEmpty)
+  }
+
+  test("one file per bucket, one task per bucket: the bucket shuffle sits below the transform, the resume filter below it") {
+    // 32 input partitions: without the bucket exchange each one writes
+    // its own file of every bucket
+    val input = turns.repartition(32)
+    val transform = (df: DataFrame) => df.withColumn("text_len", length(col("text")))
+    val plan = WritePlan.of(spark)(
+      Lineage.run(input, freshRoot(), nBuckets = 8, batchId = "f1", transform = transform))
+    val exchanges = WritePlan.shuffles(plan)
+    val bucketed = exchanges.filter(_.outputPartitioning match {
+      case p: Expression => p.references.toSeq.map(_.name) == Seq("_bucket")
+      case _ => false
+    })
+    assert(bucketed.size == 1, plan)
+    // the bucket exchange is the last one, and it carries the input only
+    assert(WritePlan.shuffles(bucketed.head).size == exchanges.size, plan)
+    assert(bucketed.head.output.map(_.name) == input.columns.toSeq :+ "_bucket", plan)
+
+    val root = freshRoot()
+    Lineage.run(input, root, nBuckets = 8, batchId = "f2", maxBucketsToCommit = 3,
+      transform = transform)
+    val resumed = WritePlan.of(spark)(
+      Lineage.run(input, root, nBuckets = 8, batchId = "f3", transform = transform))
+    val doneFilter = (p: SparkPlan) => WritePlan.find(p) {
+      case f: FilterExec => f.condition.exists(e => e.isInstanceOf[In] || e.isInstanceOf[InSet])
+      case _ => false
+    }.isDefined
+    val resumeExchange = WritePlan.shuffles(resumed).filter(_.output.exists(_.name == "_bucket"))
+    assert(resumeExchange.size == 1 && doneFilter(resumeExchange.head.child), resumed)
+    assert(Lineage.committed(root).size == 8)
+    val files = Lineage.committed(root).toSeq.map { b =>
+      val ls = Files.list(java.nio.file.Paths.get(root, "data", s"p$b"))
+      val parts = try ls.iterator().asScala.map(_.getFileName.toString)
+          .filter(_.endsWith(".parquet")).toSeq
+        finally ls.close()
+      assert(parts.size == 1, s"bucket $b: $parts")
+      parts.head
+    }
+    // 8 shuffle partitions for 8 buckets: no two buckets share a write
+    // task (part-<task>-…), where a hash of the bucket ids would collide
+    assert(files.map(_.split('-')(1)).distinct.size == 8, files)
+    val got = Lineage.readData(spark, root)
+    assert(got.columns.toSeq == turns.columns.toSeq :+ "text_len")
+    assert(got.count() == turns.count())
+    val e = intercept[IllegalArgumentException](Lineage.run(input, freshRoot(), nBuckets = 8,
+      batchId = "f4", transform = _.drop(Lineage.BucketCol)))
+    assert(e.getMessage.contains("dropped _bucket"))
   }
 
   test("a resume under a different nBuckets is refused before anything is staged") {
@@ -174,6 +231,31 @@ class LineageSpec extends SparkTestBase {
     assert(TallyCheck.observed(root) == TallyCheck.rescanned(spark, root))
     assert(Lineage.readMarkers(root).map(_.rows).sum == Lineage.readData(spark, root).count())
   }
+}
+
+/** The executed plan of the one write a block runs, final AQE stages
+  * included.
+  */
+object WritePlan extends AdaptiveSparkPlanHelper {
+  def of(spark: SparkSession)(body: => Any): SparkPlan = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+          plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      org.apache.spark.graftbridge.CoreBridge.waitListenerBusEmpty(spark.sparkContext)
+      assert(plans.size == 1, s"${plans.size} writes: $plans")
+      plans.peek()
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  def shuffles(plan: SparkPlan): Seq[ShuffleExchangeExec] =
+    collect(plan) { case e: ShuffleExchangeExec => e }
 }
 
 /** Commits under `local[2,2]` with a task that throws partway through its

@@ -72,6 +72,23 @@ class PipelineConfigSpec extends SparkTestBase {
       PipelineConfig.fromJson("""[{"explode": {}}]"""))
   }
 
+  test("an action without a required key, or an empty entry, is rejected by name") {
+    // (config, its reader, fragments the error must name)
+    val cases = Seq[(String, String => Any, Seq[String])](
+      ("- name: grok\n  field: text\n", PipelineConfig.fromYaml(_), Seq("grok", "'patterns'")),
+      ("""[{"filter": {"field": "text"}}]""", PipelineConfig.fromJson(_), Seq("filter", "'patterns'")),
+      ("""[{"date": {"field": "timestamp"}}]""", PipelineConfig.fromJson(_), Seq("date", "'formats'")),
+      ("- name: date\n  field: timestamp\n", PipelineConfig.fromYaml(_), Seq("date", "'formats'")),
+      ("""[{"add_tag": {}}]""", PipelineConfig.fromJson(_), Seq("add_tag", "'tag'")),
+      ("""[{"remove_tag": {}}]""", PipelineConfig.fromJson(_), Seq("remove_tag", "'tag'")),
+      ("- name: add_tag\n", PipelineConfig.fromYaml(_), Seq("add_tag", "'tag'")),
+      ("[{}]", PipelineConfig.fromJson(_), Seq("empty pipeline entry", "name")))
+    for ((config, read, fragments) <- cases) {
+      val e = intercept[IllegalArgumentException](read(config))
+      fragments.foreach(f => assert(e.getMessage.contains(f), s"$config: ${e.getMessage}"))
+    }
+  }
+
   test("YAML pipeline config in the reference's own dialect (testing/log-carver.yaml shape)") {
     // A semantics-preserving translation of testing/log-carver.yaml's
     // pipelines section: folded-scalar CEL condition, name-keyed actions,

@@ -39,6 +39,12 @@ object Dedup {
   def shingles(text: Column, n: Int = 3): Column =
     EU.column(WordShingles(EU.expression(text), n))
 
+  /** True iff `shingles(text, n)` is non-empty: split on single spaces,
+    * a text has at least `n` words iff it has at least `n - 1` spaces.
+    */
+  def hasShingles(text: Column, n: Int = 3): Column =
+    length(text) - length(translate(text, " ", "")) >= n - 1
+
   /** [[Dedup.shingles]]'s engine: split the UTF-8 bytes on 0x20, emit the
     * distinct word-n-gram byte spans in first-occurrence order. Each
     * shingle is `UTF8String.fromBytes(base, start_i, end_(i+n-1))` — no
@@ -52,15 +58,7 @@ object Dedup {
     override def prettyName: String = "word_shingles"
     override val dataType: DataType = ArrayType(StringType, containsNull = false)
 
-    // the memo tag is shared across duplicate instances of the same
-    // logical shingling (CollapseProject inlines the column into every
-    // use — e.g. minHashPairs evaluates it for the signature AND the
-    // emptiness filter; back-to-back duplicate evals hit the memo)
-    @transient private lazy val memoTag: AnyRef = s"word_shingles_$n"
-
-    override def nullSafeEval(input: Any): Any =
-      graft.functions.EvalMemo.memo(memoTag, input.asInstanceOf[UTF8String])(
-        compute(input))
+    override def nullSafeEval(input: Any): Any = compute(input)
 
     def compute(input: Any): ArrayData = {
       val s = input.asInstanceOf[UTF8String]
@@ -94,14 +92,9 @@ object Dedup {
       new GenericArrayData(out.toArray)
     }
 
-    def evalInput(s: Any): ArrayData = nullSafeEval(s).asInstanceOf[ArrayData]
-
-    // codegen must route through evalInput (the memoized nullSafeEval), not
-    // compute() directly — whole-stage codegen is the normal execution path,
-    // and CollapseProject duplicates this expression per use site there too
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val ref = ctx.addReferenceObj("wordShingles", this, classOf[WordShingles].getName)
-      nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $ref.evalInput($v);")
+      nullSafeCodeGen(ctx, ev, v => s"${ev.value} = $ref.compute($v);")
     }
 
     override protected def withNewChildInternal(c: Expression): WordShingles =
@@ -189,13 +182,21 @@ object Dedup {
     * Deterministic (fixed hash seeds). Collapses the O(n²) search to a
     * bucket join whose fan-out is bounded by true near-dup density.
     */
+  /** [[minHashPairs]]' signature pass: `(id, sig)` per doc with at least
+    * one shingle. The emptiness test reads the text, not the shingles: a
+    * filter on a shingle column would be pushed below the projection and
+    * shingle every doc a second time.
+    */
+  private[dedup] def minHashSignatures(df: DataFrame, idCol: String, textCol: String,
+      k: Int, n: Int): DataFrame =
+    df.filter(hasShingles(col(textCol), n))
+      .select(col(idCol).as("id"), MinHashSig(shingles(col(textCol), n), k).as("sig"))
+
   def minHashPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, k: Int = 64, bands: Int = 16, n: Int = 3): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val r = k / bands
-    val withSig = df.select(col(idCol).as("id"), col(textCol).as("text"),
-        MinHashSig(shingles(col(textCol), n), k).as("sig"))
-      .filter(size(shingles(col("text"), n)) > 0)
+    val withSig = minHashSignatures(df, idCol, textCol, k, n)
     // band value = hash of the signature slice
     val banded = withSig.select(col("id"),
       posexplode(transform(sequence(lit(0), lit(bands - 1)),

@@ -17,10 +17,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * reference's "Not found, ignore" branch, actiongeoip.go:134-137).
   *
   * The expression carries only the database PATH; the parsed reader is a
-  * per-JVM singleton ([[Mmdb.cached]]) and repeated-IP rows short-circuit
-  * through the [[graft.functions.EvalMemo]] one-entry memo (the
-  * reference's LRU(1000) analog). Codegen'd — the lookup stays inside
-  * the projection's whole-stage span.
+  * per-JVM singleton ([[Mmdb.cached]]). Each row looks up once, with no
+  * cross-row cache in place of the reference's LRU(1000): callers bind
+  * the lookup as a column ([[GeoIp.enrichMmdb]]). Codegen'd — the lookup
+  * stays inside the projection's whole-stage span.
   */
 case class MmdbCityLookup(child: Expression, path: String) extends UnaryExpression {
 
@@ -30,9 +30,7 @@ case class MmdbCityLookup(child: Expression, path: String) extends UnaryExpressi
   override val dataType: DataType = MmdbCityLookup.geoStructType
 
   override def nullSafeEval(input: Any): Any =
-    graft.functions.EvalMemo.memo(("mmdb_city", path), input.asInstanceOf[UTF8String]) {
-      MmdbCityLookup.lookupRow(Mmdb.cached(path), input.asInstanceOf[UTF8String].toString)
-    }
+    MmdbCityLookup.lookupRow(Mmdb.cached(path), input.asInstanceOf[UTF8String].toString)
 
   def evalInput(s: Any): AnyRef = nullSafeEval(s).asInstanceOf[AnyRef]
 

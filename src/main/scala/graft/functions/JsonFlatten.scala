@@ -24,10 +24,7 @@ case class JsonFlatten(child: Expression) extends UnaryExpression {
   override def prettyName: String = "json_flatten"
   override val dataType: DataType = MapType(StringType, StringType, valueContainsNull = false)
 
-  override def nullSafeEval(input: Any): Any =
-    EvalMemo.memo(JsonFlatten, input.asInstanceOf[UTF8String])(evalRaw(input))
-
-  private def evalRaw(input: Any): Any = {
+  override def nullSafeEval(input: Any): Any = {
     val bytes = input.asInstanceOf[UTF8String].getBytes
     val node = try JsonFlatten.mapper.readTree(bytes) catch { case _: Exception => null }
     if (node == null || !node.isObject) return null

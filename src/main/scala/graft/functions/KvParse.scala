@@ -31,10 +31,7 @@ case class KvParse(child: Expression) extends UnaryExpression {
   override def prettyName: String = "kv_parse"
   override val dataType: DataType = MapType(StringType, StringType, valueContainsNull = false)
 
-  override def nullSafeEval(input: Any): Any =
-    EvalMemo.memo(KvParse, input.asInstanceOf[UTF8String])(evalRaw(input))
-
-  private def evalRaw(input: Any): Any = {
+  override def nullSafeEval(input: Any): Any = {
     val s = Utf8Ascii.charSeq(input.asInstanceOf[UTF8String])
     KvParse.parse(s) match {
       case null => null

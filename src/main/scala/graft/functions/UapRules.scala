@@ -14,9 +14,9 @@ import java.util.regex.{Matcher, Pattern}
   *
   * The compiled ruleset is immutable and serializable: it rides the
   * [[UserAgentParse]] expression to executors once per plan (at 100 TB
-  * the ~1 MB database is plan metadata, not per-row state; the
-  * reference's per-process LRU(1000) is replaced by [[EvalMemo]] keyed on
-  * the ruleset instance).
+  * the ~1 MB database is plan metadata, not per-row state). The
+  * reference's per-process LRU(1000) has no analog: each row parses once,
+  * and there is no cross-row cache.
   */
 object UapRules {
 

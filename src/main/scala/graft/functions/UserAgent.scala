@@ -25,9 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    major browser/bot/tool families, for deployments that don't ship
   *    the database file.
   *
-  * The LRU cache analog is [[EvalMemo]], keyed on the ruleset instance:
-  * consecutive rows with the same UA string (the dominant case in real
-  * traffic) parse once.
+  * The reference's LRU(1000) cache has no analog here: each row parses
+  * once, and there is no cross-row cache.
   */
 case class UserAgentParse(child: Expression,
     rules: Option[UapRules.RuleSet] = None) extends UnaryExpression {
@@ -37,12 +36,8 @@ case class UserAgentParse(child: Expression,
 
   override val dataType: DataType = UserAgentParse.schema
 
-  private def memoTag: AnyRef = rules.getOrElse(UserAgentParse)
-
   override def nullSafeEval(input: Any): Any =
-    EvalMemo.memo(memoTag, input.asInstanceOf[UTF8String]) {
-      UserAgentParse.parseRow(input.asInstanceOf[UTF8String].toString, rules)
-    }
+    UserAgentParse.parseRow(input.asInstanceOf[UTF8String].toString, rules)
 
   def evalInput(s: Any): AnyRef = nullSafeEval(s).asInstanceOf[AnyRef]
 

@@ -36,10 +36,7 @@ case class GrokExtract(child: Expression, compiled: CompiledGrok)
 
   @transient private lazy val fieldArr = compiled.fields.toArray
 
-  override def nullSafeEval(input: Any): Any =
-    graft.functions.EvalMemo.memo(("gx", compiled.regex), input.asInstanceOf[UTF8String])(evalRaw(input))
-
-  private def evalRaw(input: Any): Any = {
+  override def nullSafeEval(input: Any): Any = {
     val s = graft.functions.Utf8Ascii.charSeq(input.asInstanceOf[UTF8String])
     val m = compiled.matcher(s)
     if (!m.find()) return null
@@ -99,10 +96,7 @@ case class GrokExtractMap(child: Expression, compiled: CompiledGrok)
   @transient private lazy val nameUtf8: Array[UTF8String] =
     fieldArr.map(f => UTF8String.fromString(f.name))
 
-  override def nullSafeEval(input: Any): Any =
-    graft.functions.EvalMemo.memo(("gxm", compiled.regex), input.asInstanceOf[UTF8String])(evalRaw(input))
-
-  private def evalRaw(input: Any): Any = {
+  override def nullSafeEval(input: Any): Any = {
     val s = graft.functions.Utf8Ascii.charSeq(input.asInstanceOf[UTF8String])
     val m = compiled.matcher(s)
     if (!m.find()) return null

@@ -112,12 +112,6 @@ object Lineage {
       n.get("batchId").asText, sinks, Option(n.get("nBuckets")).map(_.asInt))
   }
 
-  def readEntries(spark: SparkSession, root: String): DataFrame = {
-    import spark.implicits._
-    readMarkers(root).map(e => (e.partitionId, e.rows, e.bytes, e.batchId))
-      .toDF("partitionId", "rows", "bytes", "batchId")
-  }
-
   /** Per-sink sums of bucket tallies, sorted by sink. */
   def sinkTotals(tallies: Seq[SinkTally]): Seq[SinkTally] =
     tallies.groupBy(_.sink).toSeq.map { case (s, ts) =>

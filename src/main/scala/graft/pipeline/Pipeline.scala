@@ -85,6 +85,29 @@ object Pipeline {
 
   // ---- shared helpers for actions ----
 
+  // one counter names every temp column: nested stages (an if inside a
+  // branch, an action inside a conditional) each get their own names, so
+  // an inner stage never overwrites or drops an outer's
+  private val tmpCtr = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Evaluate each of `values` once per row, against `df`: bind them as
+    * temp columns, hand `body` references to them, drop the columns
+    * afterwards. An expression written at each use is evaluated at each
+    * use, and the uses after a stage's own merge would read the
+    * already-updated row; a bound column is one expression in the plan
+    * (Catalyst does not inline a non-trivial projection into more than
+    * one use).
+    */
+  private[pipeline] def bindAll(df: DataFrame, values: Seq[Column])(
+      body: (DataFrame, Seq[Column]) => DataFrame): DataFrame = {
+    val names = values.map(_ => s"_graft_tmp_${tmpCtr.getAndIncrement()}")
+    body(df.withColumns(names.zip(values).toMap), names.map(col)).drop(names: _*)
+  }
+
+  private[pipeline] def bind(df: DataFrame, value: Column)(
+      body: (DataFrame, Column) => DataFrame): DataFrame =
+    bindAll(df, Seq(value))((d, bound) => body(d, bound.head))
+
   /** Set `fields[key] = value` under guard; null value = no-op. */
   private[pipeline] def setField(df: DataFrame, guard: Column, key: String, value: Column): DataFrame = {
     val p = normalizePath(key)
@@ -107,10 +130,10 @@ object Pipeline {
   /** The `AddError` convention (`event.go:293-296`): `_<action>_error`
     * field + `_<action>_failure` tag, applied where `failed`.
     */
-  private[pipeline] def addError(df: DataFrame, failed: Column, action: String, msg: String): DataFrame = {
+  private[pipeline] def addError(df: DataFrame, failed: Column, action: String, msg: Column): DataFrame = {
     val tagged = df.withColumn(Envelope.TagsCol,
       EventFns.withActionFailure(col(Envelope.TagsCol), coalesce(failed, lit(false)), action))
-    setField(tagged, coalesce(failed, lit(false)), s"_${action}_error", lit(msg))
+    setField(tagged, coalesce(failed, lit(false)), s"_${action}_error", msg)
   }
 
   /** Unset a dynamic field under guard. */
@@ -122,6 +145,21 @@ object Pipeline {
       when(guard, map_filter(col(Envelope.FieldsCol), (k, _) => k =!= p))
         .otherwise(col(Envelope.FieldsCol)))
   }
+
+  /** The body the map-merging actions (grok, json, kv, user_agent) share:
+    * bind `when(guard, extracted)` once, merge it into the fields map where
+    * it is non-null, `AddError` with message `failure` where the guard
+    * held and it is null, and unset `removeField` where it merged.
+    */
+  private[pipeline] def mergeAction(df: DataFrame, guard: Column, action: String,
+      extracted: Column, failure: Column, removeField: Option[String] = None): DataFrame =
+    bind(df, when(guard, extracted)) { (d, m) =>
+      val merged = d.withColumn(Envelope.FieldsCol,
+        when(m.isNotNull, mergeMaps(col(Envelope.FieldsCol), m))
+          .otherwise(col(Envelope.FieldsCol)))
+      val tagged = addError(merged, guard && m.isNull, action, failure)
+      removeField.fold(tagged)(unsetField(tagged, m.isNotNull, _))
+    }
 }
 
 /** `grok` action (`lc-lib/processor/actiongrok.go:58-97`): first-matching
@@ -142,18 +180,12 @@ case class GrokStage(field: String, patterns: Seq[String],
     val src = Pipeline.resolve(df)(field)
     val extracted = compiled.map(c =>
       EU.column(GrokExtractMap(EU.expression(src), c)))
-    val merged = coalesce(extracted: _*) // first-matching pattern wins
-    val matchedGuard = guard && merged.isNotNull
-    var out = df.withColumn(Envelope.FieldsCol,
-      when(matchedGuard, Pipeline.mergeMaps(col(Envelope.FieldsCol), merged))
-        .otherwise(col(Envelope.FieldsCol)))
-    out = Pipeline.addError(out, guard && merged.isNull && src.isNotNull,
-      "grok", s"Field '$field' did not match any of the given patterns")
-    // the reference tags a MISSING source field too (actiongrok.go:70)
-    out = Pipeline.addError(out, guard && src.isNull,
-      "grok", s"Field '$field' is not present or not a string")
-    if (remove) out = Pipeline.unsetField(out, matchedGuard, field)
-    out
+    // first-matching pattern wins; the reference tags a MISSING source
+    // field too (actiongrok.go:70)
+    Pipeline.mergeAction(df, guard, "grok", coalesce(extracted: _*),
+      when(src.isNull, lit(s"Field '$field' is not present or not a string"))
+        .otherwise(lit(s"Field '$field' did not match any of the given patterns")),
+      Option.when(remove)(field))
   }
 }
 
@@ -165,30 +197,21 @@ case class DateStage(field: String, formats: Seq[String],
     remove: Boolean = false) extends Stage {
   def apply(df: DataFrame, guard: Column): DataFrame = {
     val src = Pipeline.resolve(df)(field)
-    val parsed = EventFns.dateParse(src, formats)
-    var out = df.withColumn(Envelope.EventTsCol,
-      when(guard && parsed.isNotNull, parsed).otherwise(col(Envelope.EventTsCol)))
-    out = Pipeline.addError(out, guard && parsed.isNull,
-      "date", s"Field '$field' could not be parsed with any of the given formats")
-    if (remove) out = Pipeline.unsetField(out, guard && parsed.isNotNull, field)
-    out
+    Pipeline.bind(df, when(guard, EventFns.dateParse(src, formats))) { (d, parsed) =>
+      val out = Pipeline.addError(
+        d.withColumn(Envelope.EventTsCol, coalesce(parsed, col(Envelope.EventTsCol))),
+        guard && parsed.isNull, "date",
+        lit(s"Field '$field' could not be parsed with any of the given formats"))
+      if (remove) Pipeline.unsetField(out, parsed.isNotNull, field) else out
+    }
   }
 }
 
 /** `json` action (`lc-lib/processor/actionjson.go:45-81`). */
 case class JsonStage(field: String, remove: Boolean = false) extends Stage {
-  def apply(df: DataFrame, guard: Column): DataFrame = {
-    val src = Pipeline.resolve(df)(field)
-    val parsed = JsonFlatten(src)
-    val ok = guard && parsed.isNotNull
-    var out = df.withColumn(Envelope.FieldsCol,
-      when(ok, Pipeline.mergeMaps(col(Envelope.FieldsCol), parsed))
-        .otherwise(col(Envelope.FieldsCol)))
-    out = Pipeline.addError(out, guard && parsed.isNull,
-      "json", s"Field '$field' could not be unmarshalled")
-    if (remove) out = Pipeline.unsetField(out, ok, field)
-    out
-  }
+  def apply(df: DataFrame, guard: Column): DataFrame =
+    Pipeline.mergeAction(df, guard, "json", JsonFlatten(Pipeline.resolve(df)(field)),
+      lit(s"Field '$field' could not be unmarshalled"), Option.when(remove)(field))
 }
 
 /** `kv` action (`lc-lib/processor/actionkv.go`): quote-aware k=v pairs
@@ -197,31 +220,23 @@ case class JsonStage(field: String, remove: Boolean = false) extends Stage {
 case class KvStage(field: String, prefix: String = "") extends Stage {
   def apply(df: DataFrame, guard: Column): DataFrame = {
     val src = Pipeline.resolve(df)(field)
-    val parsed = KvParse(src)
-    val prefixCol =
-      if (prefix.isEmpty) lit("")
-      else EventFns.patternFormat(prefix, Pipeline.resolve(df),
-        col(Envelope.EventTsCol), Pipeline.typeOf(df))
-    val prefixed =
-      if (prefix.isEmpty) parsed
-      else transform_keys(parsed, (k, _) => concat(prefixCol, k))
-    // a %{+layout} prefix over a null event_ts renders NULL: applying it
-    // would make every map key null (a runtime abort); the reference
-    // AddErrors "Failed to format prefix" per event and skips the kv
-    // (actionkv.go:79)
-    val prefixOk = if (prefix.isEmpty) lit(true) else prefixCol.isNotNull
-    val ok = guard && parsed.isNotNull && prefixOk
-    var out = df.withColumn(Envelope.FieldsCol,
-      when(ok, Pipeline.mergeMaps(col(Envelope.FieldsCol), prefixed))
-        .otherwise(col(Envelope.FieldsCol)))
-    out = Pipeline.addError(out, guard && parsed.isNull && src.isNotNull,
-      "kv", "Parsing interrupted")
     // the reference tags a MISSING source field too (actionkv.go:73)
-    out = Pipeline.addError(out, guard && src.isNull,
-      "kv", s"Field '$field' is not present or not a string")
-    out = Pipeline.addError(out, guard && parsed.isNotNull && !prefixOk,
-      "kv", "Failed to format prefix")
-    out
+    val failure = when(src.isNull, lit(s"Field '$field' is not present or not a string"))
+    if (prefix.isEmpty)
+      Pipeline.mergeAction(df, guard, "kv", KvParse(src),
+        failure.otherwise(lit("Parsing interrupted")))
+    else Pipeline.bind(df, when(guard, KvParse(src))) { (d, parsed) =>
+      val prefixCol = EventFns.patternFormat(prefix, Pipeline.resolve(d),
+        col(Envelope.EventTsCol), Pipeline.typeOf(d))
+      // a %{+layout} prefix over a null event_ts renders NULL: applying it
+      // would make every map key null (a runtime abort); the reference
+      // AddErrors "Failed to format prefix" per event and skips the kv
+      // (actionkv.go:79)
+      Pipeline.mergeAction(d, guard, "kv",
+        when(prefixCol.isNotNull, transform_keys(parsed, (k, _) => concat(prefixCol, k))),
+        failure.when(parsed.isNull, lit("Parsing interrupted"))
+          .otherwise(lit("Failed to format prefix")))
+    }
   }
 }
 
@@ -231,7 +246,7 @@ case class KvStage(field: String, prefix: String = "") extends Stage {
 case class SetFieldStage(field: String, valueCel: String) extends Stage {
   def apply(df: DataFrame, guard: Column): DataFrame = {
     val value = Cel.compile(valueCel, Pipeline.resolve(df), Pipeline.typeOf(df))
-    Pipeline.setField(df, guard, field, value)
+    Pipeline.bind(df, when(guard, value))(Pipeline.setField(_, guard, field, _))
   }
 }
 
@@ -239,41 +254,39 @@ case class SetFieldStage(field: String, valueCel: String) extends Stage {
   * uap-style decomposition of a UA string into
   * `user_agent[original|name|major|minor|patch|os[family|major|minor]|device[name]]`
   * entries of the fields map (path syntax flattened to dotted keys);
-  * missing source field → `_user_agent_failure`. The LRU(1000) cache is
-  * replaced by the EvalMemo consecutive-row memo inside
-  * [[graft.functions.UserAgentParse]].
+  * missing source field → `_user_agent_failure`. The reference's
+  * LRU(1000) cache has no analog: each row parses once (the parse is
+  * bound, then its eight entries are read off the bound struct), and
+  * there is no cross-row cache.
   */
 case class UserAgentStage(field: String, remove: Boolean = false,
     rules: Option[graft.functions.UapRules.RuleSet] = None) extends Stage {
   def apply(df: DataFrame, guard: Column): DataFrame = {
     val src = Pipeline.resolve(df)(field)
-    val ua = rules match {
+    val parse = rules match {
       case Some(rs) => graft.functions.UserAgentParse(src, rs)
       case None => graft.functions.UserAgentParse(src)
     }
-    val entries: Seq[(String, Column)] = Seq(
-      "user_agent.original" -> src,
-      "user_agent.name" -> ua.getField("name"),
-      "user_agent.major" -> ua.getField("major"),
-      "user_agent.minor" -> ua.getField("minor"),
-      "user_agent.patch" -> ua.getField("patch"),
-      "user_agent.os.family" -> ua.getField("os_family"),
-      "user_agent.os.major" -> ua.getField("os_major"),
-      "user_agent.os.minor" -> ua.getField("os_minor"),
-      "user_agent.device.name" -> ua.getField("device"))
-    // absent versions are simply not set (actionuseragent.go's
-    // conditional MustResolve calls) — drop null-valued entries
-    val uaMap = map_filter(
-      map(entries.flatMap { case (k, v) => Seq(lit(k), v) }: _*),
-      (_, v) => v.isNotNull)
-    val ok = guard && src.isNotNull
-    var out = df.withColumn(Envelope.FieldsCol,
-      when(ok, Pipeline.mergeMaps(col(Envelope.FieldsCol), uaMap))
-        .otherwise(col(Envelope.FieldsCol)))
-    out = Pipeline.addError(out, guard && src.isNull,
-      "user_agent", s"Field '$field' is not present")
-    if (remove) out = Pipeline.unsetField(out, ok, field)
-    out
+    Pipeline.bind(df, when(guard, parse)) { (d, ua) =>
+      val entries: Seq[(String, Column)] = Seq(
+        "user_agent.original" -> src,
+        "user_agent.name" -> ua.getField("name"),
+        "user_agent.major" -> ua.getField("major"),
+        "user_agent.minor" -> ua.getField("minor"),
+        "user_agent.patch" -> ua.getField("patch"),
+        "user_agent.os.family" -> ua.getField("os_family"),
+        "user_agent.os.major" -> ua.getField("os_major"),
+        "user_agent.os.minor" -> ua.getField("os_minor"),
+        "user_agent.device.name" -> ua.getField("device"))
+      // absent versions are simply not set (actionuseragent.go's
+      // conditional MustResolve calls) — drop null-valued entries
+      val uaMap = map_filter(
+        map(entries.flatMap { case (k, v) => Seq(lit(k), v) }: _*),
+        (_, v) => v.isNotNull)
+      // a null parse is a null (missing) source under the guard
+      Pipeline.mergeAction(d, guard, "user_agent", when(ua.isNotNull, uaMap),
+        lit(s"Field '$field' is not present"), Option.when(remove)(field))
+    }
   }
 }
 
@@ -347,13 +360,6 @@ case class FilterStage(patterns: Seq[String], matchMode: String = "any",
   * are evaluated per-branch with all prior branches excluded, vectorised
   * over the whole frame. Null predicate = false.
   */
-object ConditionalStage {
-  // nested conditionals (an if inside a branch) each need their OWN
-  // frozen-predicate columns: a fixed naming scheme let the inner stage
-  // overwrite and then drop the outer's temp columns
-  private val tmpCtr = new java.util.concurrent.atomic.AtomicLong()
-}
-
 case class ConditionalStage(
     branches: Seq[(String, Seq[Stage])],
     otherwiseStages: Seq[Stage] = Seq.empty) extends Stage {
@@ -363,18 +369,18 @@ case class ConditionalStage(
     // branch's actions run, `ast.go:62-87`) — freeze all predicates as
     // temp columns against the input frame so branch mutations cannot
     // flip later predicates for already-selected rows.
-    val base = ConditionalStage.tmpCtr.getAndIncrement()
-    val tmpNames = branches.indices.map(i => s"_graft_cond_${base}_$i")
-    var out = branches.zip(tmpNames).foldLeft(df) { case (d, ((celSrc, _), n)) =>
-      d.withColumn(n, coalesce(Cel.compile(celSrc, Pipeline.resolve(d), Pipeline.typeOf(d)), lit(false)))
+    val predicates = branches.map { case (celSrc, _) =>
+      coalesce(Cel.compile(celSrc, Pipeline.resolve(df), Pipeline.typeOf(df)), lit(false))
     }
-    var notPrior: Column = lit(true)
-    for (((_, stages), n) <- branches.zip(tmpNames)) {
-      val branchGuard = guard && notPrior && col(n)
-      out = stages.foldLeft(out)((d, s) => s.apply(d, branchGuard))
-      notPrior = notPrior && !col(n)
+    Pipeline.bindAll(df, predicates) { (frozen, selected) =>
+      var out = frozen
+      var notPrior: Column = lit(true)
+      for (((_, stages), p) <- branches.zip(selected)) {
+        val branchGuard = guard && notPrior && p
+        out = stages.foldLeft(out)((d, s) => s.apply(d, branchGuard))
+        notPrior = notPrior && !p
+      }
+      otherwiseStages.foldLeft(out)((d, s) => s.apply(d, guard && notPrior))
     }
-    out = otherwiseStages.foldLeft(out)((d, s) => s.apply(d, guard && notPrior))
-    out.drop(tmpNames: _*)
   }
 }

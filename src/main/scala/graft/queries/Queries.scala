@@ -135,12 +135,13 @@ object Queries {
       lit("type="), col("event_type"),
       lit(" msg=\"cents "), round(col("value") * 100).cast("long").cast("string"), lit("\""),
       lit(" user="), col("user_id").cast("string"))
-    val kv = KvParse(line)
-    ev.select(
-      col("event_id"),
-      element_at(kv, "type").as("kv_type"),
-      element_at(kv, "msg").as("kv_msg"),
-      element_at(kv, "user").as("kv_user"))
+    // parsed once: bound as a column, read by the three lookups
+    ev.select(col("event_id"), KvParse(line).as("kv"))
+      .select(
+        col("event_id"),
+        element_at(col("kv"), "type").as("kv_type"),
+        element_at(col("kv"), "msg").as("kv_msg"),
+        element_at(col("kv"), "user").as("kv_user"))
       .orderBy("event_id")
   }
   val qKvParseSql: String =

@@ -58,8 +58,10 @@ object QueriesR2 {
     val ev = tbl(spark, dir, "events")
     val uaStr = element_at(array(UaStrings.map(lit): _*),
       (col("event_id") % 5 + 1).cast("int"))
-    val ua = UserAgentParse(uaStr)
-    ev.select(
+    // parsed once: bound as a column, read by the eight field lookups
+    val ua = col("ua")
+    ev.select(UserAgentParse(uaStr).as("ua"))
+      .select(
         ua.getField("name").as("ua_name"),
         concat_ws(".", ua.getField("major"), ua.getField("minor"), ua.getField("patch")).as("ua_version"),
         ua.getField("os_family").as("os_family"),

@@ -265,12 +265,6 @@ object Ann {
   def l2Norm(vec: Column): Column =
     sqrt(aggregate(vec.cast("array<double>"), lit(0.0d), (acc, x) => acc + x * x))
 
-  /** Note: divide by a precomputed norm column where possible — embedding
-    * the fold inside the transform lambda re-evaluates it per element.
-    */
-  def l2Normalize(vec: Column, norm: Column): Column =
-    transform(vec.cast("array<double>"), x => x / norm)
-
   /** IVF-style top-k: corpus assigned to `nlist` coarse cells (the
     * deterministic first-`nlist` corpus vectors serve as centroids);
     * each query probes its `nprobe` nearest cells only.

@@ -318,18 +318,6 @@ object StreamingPipeline {
       .dropDuplicatesWithinWatermark("_dk0", "_dk1")
       .drop("_dk0", "_dk1")
 
-  /** Windowed per-sink throughput counters — the admin-API live metrics
-    * (`speed_lps`-style, 5 s EWMA analog becomes a sliding event-time
-    * window aggregate).
-    */
-  def sinkRates(assigned: DataFrame, window: String = "1 minute",
-      slide: String = "30 seconds"): DataFrame =
-    assigned
-      .withWatermark("ts", "5 minutes")
-      .groupBy(org.apache.spark.sql.functions.window(col("ts"), window, slide),
-        col(Router.SinkCol).as("sink"))
-      .agg(count(lit(1)).as("turns"), sum(octet_length(col("text"))).as("bytes"))
-
   /** Live `speed_lps` meter per query (the harvester EWMA,
     * `lc-lib/harvester/harvester.go:540-541` via `core/util.go:27-47`):
     * a StreamingQueryListener feeding each micro-batch's row count and

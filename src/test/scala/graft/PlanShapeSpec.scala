@@ -2,12 +2,16 @@ package graft
 
 import scala.reflect.ClassTag
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning, SinglePartition}
 import org.apache.spark.sql.execution.{ExpandExec, FileSourceScanExec, GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, MergingSessionsExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
 import org.apache.spark.sql.execution.window.WindowExec
+
+import graft.functions.{KvParse, UserAgentParse}
+import graft.grok.GrokExtract
 
 /** Query-level plan-shape contracts: the static physical plan (AQE off)
   * of a `SparkEntry.queries` entry at sf0.001 must keep its row's rules.
@@ -46,6 +50,10 @@ object PlanShapeSpec {
   private def exactly[T <: SparkPlan : ClassTag](n: Int, what: String): Rule =
     (s"$n $what", p => all[T](p).size == n)
 
+  /** `n` copies of expression `E` in the plan, each one evaluation per row. */
+  private def exprs[E <: Expression](n: Int, what: String)(implicit t: ClassTag[E]): Rule =
+    (s"$n $what", p => SparkTestBase.exprCount(p)(t.runtimeClass.isInstance) == n)
+
   private def shuffles(p: SparkPlan) = all[ShuffleExchangeExec](p).map(_.outputPartitioning)
 
   private def hashShuffles(n: Int): Rule =
@@ -71,6 +79,10 @@ object PlanShapeSpec {
     Seq(exactly[BaseJoinExec](1, "join"), noLoopJoin, noShuffleBelowJoins)
 
   val Rows: Seq[Row] = Seq(
+    // each extraction is bound once and read by every output column
+    Row("q_grok_nginx", Seq(exprs[GrokExtract](1, "grok_extract"))),
+    Row("q_kv_parse", Seq(exprs[KvParse](1, "kv_parse"))),
+    Row("q_user_agent", Seq(exprs[UserAgentParse](1, "user_agent_parse"))),
     Row("q_ann_ivf", cellJoin),
     Row("q_ann_ivf_trained", cellJoin),
     Row("q_hard_negatives", cellJoin),

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestBase {
@@ -16,6 +18,12 @@ object SparkTestBase {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Expressions matching `p` across every operator of `plan` (each copy
+    * in the plan is one evaluation per row).
+    */
+  def exprCount[P <: QueryPlan[P]](plan: P)(p: Expression => Boolean): Int =
+    plan.collect { case node => node.expressions.map(_.collect { case e if p(e) => e }.size).sum }.sum
 }
 
 abstract class SparkTestBase extends AnyFunSuite {

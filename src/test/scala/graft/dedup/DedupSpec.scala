@@ -24,6 +24,12 @@ class DedupSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1).toSeq).toMap
     for ((t, i) <- cases.zipWithIndex)
       assert(got(i.toLong) == localShingles(t), s"mismatch for '$t'")
+    for (n <- 1 to 4) {
+      val has = df2.select($"doc_id", Dedup.hasShingles($"text", n))
+        .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+      for ((t, i) <- cases.zipWithIndex)
+        assert(has(i.toLong) == localShingles(t, n).nonEmpty, s"hasShingles n=$n for '$t'")
+    }
   }
 
   test("WordShingles fuzz: random space/rune soups equal sliding-window semantics") {
@@ -87,6 +93,24 @@ class DedupSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(exact.nonEmpty, "corpus should contain planted near-dups")
     assert(lsh == exact)
+  }
+
+  test("minHashPairs' signature pass shingles each doc once") {
+    val plan = Dedup.minHashSignatures(docs, "doc_id", "text", k = 64, n = 3)
+      .queryExecution.optimizedPlan
+    assert(SparkTestBase.exprCount(plan)(_.isInstanceOf[Dedup.WordShingles]) == 1, plan.toString)
+  }
+
+  test("adjacent duplicate rows through a real plan stay independent") {
+    // the DataFrame path: duplicates sorted adjacent within one partition,
+    // shingled under whole-stage codegen, results must be per-row correct
+    val texts = Seq("d1 d2 d3", "d1 d2 d3", "e1 e2 e3", "d1 d2 d3", "e1 e2 e3")
+    val got = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("id", "text").coalesce(1).sortWithinPartitions("text")
+      .select($"text", graft.dedup.Dedup.shingles($"text", 2).as("sh"))
+      .collect().map(r => r.getString(0) -> r.getSeq[String](1).toSeq)
+    for ((t, sh) <- got)
+      assert(sh == t.split(" ").sliding(2).map(_.mkString(" ")).toSeq, s"text '$t'")
   }
 
   test("simhash pairs: engine banding equals naive all-pairs hamming") {

@@ -52,7 +52,7 @@ class LineageSpec extends SparkTestBase {
     // no duplicated rows across the two runs
     assert(got.select("conv_id", "turn_idx").distinct().count() == turns.count())
     // lineage row counts sum to the input size
-    val lineageRows = Lineage.readEntries(spark, root).agg(sum("rows")).collect()(0).getLong(0)
+    val lineageRows = Lineage.readMarkers(root).map(_.rows).sum
     assert(lineageRows == turns.count())
   }
 
@@ -67,8 +67,8 @@ class LineageSpec extends SparkTestBase {
     Lineage.run(turns.repartition(2), rootA, nBuckets = 8, batchId = "w2")
     Lineage.run(turns.repartition(32), rootB, nBuckets = 8, batchId = "w32")
     assert(Lineage.committed(rootA) == Lineage.committed(rootB))
-    val perBucket = (root: String) => Lineage.readEntries(spark, root)
-      .select("partitionId", "rows").collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val perBucket = (root: String) =>
+      Lineage.readMarkers(root).map(e => e.partitionId -> e.rows).toMap
     assert(perBucket(rootA) == perBucket(rootB))
     val a = Lineage.readData(spark, rootA).select("conv_id", "turn_idx", "text")
     val b = Lineage.readData(spark, rootB).select("conv_id", "turn_idx", "text")
@@ -160,14 +160,14 @@ class LineageSpec extends SparkTestBase {
   test("a stale .tmp marker (crash between write and atomic move) is never read as a lineage entry") {
     val root = freshRoot()
     Lineage.run(turns, root, nBuckets = 4, batchId = "b1")
-    val entriesBefore = Lineage.readEntries(spark, root).collect().toSet
+    val entriesBefore = Lineage.readMarkers(root).toSet
     // simulate the crash residue: a COMPLETE tmp (worst case — it parses)
     val dir = java.nio.file.Paths.get(root, "lineage")
     Files.writeString(dir.resolve("p0.json.tmp"),
       """{"partitionId":0,"rows":999999,"bytes":999999,"batchId":"ghost"}""")
     // and a torn one
     Files.writeString(dir.resolve("p1.json.tmp"), """{"partitionId":1,"ro""")
-    val entriesAfter = Lineage.readEntries(spark, root).collect().toSet
+    val entriesAfter = Lineage.readMarkers(root).toSet
     assert(entriesAfter == entriesBefore,
       "tmp markers must not double-count or corrupt lineage aggregates")
   }
@@ -193,9 +193,9 @@ class LineageSpec extends SparkTestBase {
     val df = (0L until 40L).map(i => (s"c${i % 7}", i)).toDF("conv_id", "n")
     val n = Lineage.run(df, root, nBuckets = 4, batchId = "b1")
     assert(n > 0)
-    val entries = Lineage.readEntries(spark, root)
-    assert(entries.agg(sum("rows")).collect()(0).getLong(0) == 40L)
-    assert(entries.agg(sum("bytes")).collect()(0).getLong(0) == 0L)
+    val entries = Lineage.readMarkers(root)
+    assert(entries.map(_.rows).sum == 40L)
+    assert(entries.map(_.bytes).sum == 0L)
     assert(Lineage.readData(spark, root).count() == 40L)
   }
 

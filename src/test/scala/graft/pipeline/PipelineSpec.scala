@@ -1,7 +1,11 @@
 package graft.pipeline
 
-import graft.SparkTestBase
-import graft.model.Envelope
+import graft.{SparkTestBase, TranscriptPipeline}
+import graft.SparkTestBase.exprCount
+import graft.functions.{GoTime, JsonFlatten, KvParse, UserAgentParse}
+import graft.grok.GrokExtractMap
+import graft.model.{Envelope, TranscriptGen}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RLike}
 import org.apache.spark.sql.functions._
 
 class PipelineSpec extends SparkTestBase {
@@ -144,5 +148,47 @@ class PipelineSpec extends SparkTestBase {
       map_contains_key(col(Envelope.FieldsCol), "a")).collect()(0)
     assert(r.getString(0).contains("_kv_failure"), "null prefix must tag, not crash")
     assert(!r.getBoolean(1), "kv fields must not apply under a failed prefix")
+  }
+
+  test("an action whose capture overwrites its source key merges once and tags nothing") {
+    // (action, the set_field that seeds the source, the action on it, the
+    // fields it must merge); remove = false, so each source key keeps its
+    // own capture
+    val cases = Seq(
+      ("grok", SetFieldStage("msg", "'hello world'"),
+        GrokStage("msg", Seq("%{WORD:msg} %{WORD:rest}")),
+        Map("msg" -> "hello", "rest" -> "world")),
+      ("json", SetFieldStage("payload", """'{"payload": 7}'"""),
+        JsonStage("payload"), Map("payload" -> "7")),
+      ("kv", SetFieldStage("pair", "'pair=one two=2'"),
+        KvStage("pair"), Map("pair" -> "one", "two" -> "2")))
+    for ((action, seed, stage, merged) <- cases) {
+      val rows = Pipeline(base, Seq(seed, stage))
+        .select(col(Envelope.TagsCol), col(Envelope.FieldsCol)).collect()
+      for (r <- rows) {
+        val tags = r.getSeq[String](0)
+        val fields = r.getMap[String, String](1)
+        assert(!tags.contains(s"_${action}_failure"), s"$action: tags $tags")
+        assert(!fields.contains(s"_${action}_error"), s"$action: fields $fields")
+        for ((k, v) <- merged) assert(fields.get(k).contains(v), s"$action: fields $fields")
+      }
+    }
+  }
+
+  test("each action's extraction is one expression in the optimized plan") {
+    val turns = TranscriptGen.generate(spark, 42L, 10L, parallelism = 2).toDF()
+    val flagship = TranscriptPipeline.run(spark, turns).queryExecution.optimizedPlan
+    val nginxDate = GoTime.shapeRegex("02/Jan/2006:15:04:05 -0700").get
+    val counts = Seq[(String, Expression => Boolean)](
+      "grok_extract_map" -> (_.isInstanceOf[GrokExtractMap]),
+      "kv_parse" -> (_.isInstanceOf[KvParse]),
+      "json_flatten" -> (_.isInstanceOf[JsonFlatten]),
+      "nginx-layout date RLIKE" -> {
+        case RLike(_, Literal(re, _)) => String.valueOf(re) == nginxDate
+        case _ => false
+      }).map { case (what, p) => what -> exprCount(flagship)(p) }
+    assert(counts.forall(_._2 == 1), s"copies per row: $counts\n$flagship")
+    val ua = Pipeline(turns, Seq(UserAgentStage("text"))).queryExecution.optimizedPlan
+    assert(exprCount(ua)(_.isInstanceOf[UserAgentParse]) == 1, ua.toString)
   }
 }
